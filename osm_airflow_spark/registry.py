@@ -14,7 +14,6 @@ decimal and casting back — see ``dsum``.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Callable
 from typing import Any
 
@@ -25,42 +24,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-
-
-# Analyzed-plan cache (r10, VERDICT r9 next-round #8): registry calls
-# are referentially transparent — same (session, key, sf_dir) → same
-# result (fixture dirs are immutable for a session's lifetime, the
-# standing io.load_table contract) — so repeated calls can return the
-# SAME DataFrame object and skip re-analysis of the whole tree.
-# Measured at sf0.1: a reused DataFrame's .count() runs ~30-40% faster
-# than a rebuilt one even WARM (flagship 0.66→0.49 s, win_time_session
-# 0.37→0.27 s, llm_dedup_near 1.08→0.74 s), because only the thin
-# count wrapper re-analyzes. Bounded LRU so long sessions running the
-# whole 265-key gate don't pin every localCheckpoint'ed lineage to
-# session end — eviction drops the reference and the ContextCleaner
-# reclaims the checkpoint blocks. Escape hatch:
-# SPARK_GRAFT_NO_PLAN_CACHE=1 (e.g. when timing cold compiles).
-from collections import OrderedDict
-
-_PLAN_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-_PLAN_CACHE_MAX = 64
-
-
-def _plan_cache_key(spark: SparkSession, key: str, sf_dir: str) -> tuple:
-    # NOT id(spark): newSession() clones share one applicationId, and
-    # after an old session object is GC'd a new one can reuse the same
-    # id(), serving a DataFrame bound to the dead session (ADVICE r10).
-    # A uuid token stamped on the session object is unique per live
-    # Python session object and dies with it.
-    tok = getattr(spark, "_graft_plan_token", None)
-    if tok is None:
-        tok = uuid.uuid4().hex
-        spark._graft_plan_token = tok
-    return (tok, key, sf_dir)
-
-
-def clear_plan_cache() -> None:
-    _PLAN_CACHE.clear()
 
 
 def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -76,20 +39,7 @@ def query(key: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             from osm_airflow_spark.session import configure_runtime
 
             configure_runtime(spark)
-            import os as _os
-
-            if _os.environ.get("SPARK_GRAFT_NO_PLAN_CACHE"):
-                return fn(spark, sf_dir)
-            ck = _plan_cache_key(spark, key, sf_dir)
-            hit = _PLAN_CACHE.get(ck)
-            if hit is not None:
-                _PLAN_CACHE.move_to_end(ck)
-                return hit
-            df = fn(spark, sf_dir)
-            _PLAN_CACHE[ck] = df
-            if len(_PLAN_CACHE) > _PLAN_CACHE_MAX:
-                _PLAN_CACHE.popitem(last=False)
-            return df
+            return fn(spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__

@@ -9,9 +9,10 @@ from pyspark.sql import functions as F
 from osm_airflow_spark.llm.dedup import minhash_lsh_pairs, simhash_expr
 from osm_airflow_spark.llm.multimodal import documents_as_media, extract_features, fake_features
 from osm_airflow_spark.llm.similarity import cosine_expr
-from osm_airflow_spark.registry import all_queries
+from osm_airflow_spark.registry import all_oracles, all_queries
 
 QUERIES = all_queries()
+ORACLES = all_oracles()
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +26,13 @@ def docs(spark):
         ],
         "doc_id long, text string",
     )
+
+
+@pytest.fixture(scope="module")
+def topk_ids(spark, sf_dir):
+    """llm_sim_topk's exact top-10 vec_ids in result order: the ground
+    truth the ANN recall tests compare against, built once per module."""
+    return [r["vec_id"] for r in QUERIES["llm_sim_topk"](spark, sf_dir).collect()]
 
 
 def test_minhash_finds_exact_and_near_dups(docs):
@@ -124,18 +132,14 @@ def test_embed_lsh_planted_duplicate_recall(spark, sf_dir):
     union.createOrReplaceTempView("_embed_lsh_planted")
 
     import osm_airflow_spark.llm.dedup as dd
-    from osm_airflow_spark.registry import clear_plan_cache
 
     orig = dd.load_table
     dd.load_table = lambda sp, sd, t: union if t == "embeddings" else orig(sp, sd, t)
-    clear_plan_cache()  # the registry plan cache would serve the
-    # unpatched plan — and cache the patched one for later tests
     try:
         got = llm_dedup_embed_lsh(spark, sf_dir)
         pairs = {(r["vec_a"], r["vec_b"]): r["cos_sim"] for r in got.collect()}
     finally:
         dd.load_table = orig
-        clear_plan_cache()
 
     for vid in planted_ids:
         assert (vid, vid + n * 10) in pairs, f"planted dup {vid} not recalled"
@@ -201,8 +205,8 @@ def test_cosine_expr_exact_values(spark):
     assert vals == [1.0, 0.0, 1.0]
 
 
-def test_ann_lsh_results_subset_of_brute_force(spark, sf_dir):
-    brute = {r["vec_id"] for r in QUERIES["llm_sim_topk"](spark, sf_dir).collect()}
+def test_ann_lsh_results_subset_of_brute_force(spark, sf_dir, topk_ids):
+    brute = set(topk_ids)
     ann = QUERIES["llm_sim_ann_lsh"](spark, sf_dir).collect()
     # every ANN hit must be a genuine cosine score (sanity), and the
     # bucket's top hits should overlap the true top-k
@@ -393,7 +397,7 @@ def test_dedup_cluster_best_covers_all_docs_once(spark, sf_dir):
     assert 0 < len(rows) <= d.count()
 
 
-def test_multiprobe_recall_at_least_single_probe(spark, sf_dir):
+def test_multiprobe_recall_at_least_single_probe(spark, sf_dir, topk_ids):
     """Multi-probe amplifies a SINGLE 8-bit table: its recall must
     dominate the plain one-bucket probe of that same table (built
     inline — llm_sim_ann_lsh is now the stronger multi-TABLE family,
@@ -401,7 +405,7 @@ def test_multiprobe_recall_at_least_single_probe(spark, sf_dir):
     from osm_airflow_spark.io import load_table
     from osm_airflow_spark.llm.similarity import cosine_expr, hyperplane_signature
 
-    brute = [r["vec_id"] for r in QUERIES["llm_sim_topk"](spark, sf_dir).collect()]
+    brute = topk_ids
     e = load_table(spark, sf_dir, "embeddings")
     b = e.select("vec_id", "embedding", hyperplane_signature("embedding").alias("bucket"))
     q = b.where(F.col("vec_id") == 0).select(
@@ -620,12 +624,12 @@ def _floor_for(floors: dict, sf_dir: str) -> float:
 
 
 @pytest.mark.parametrize("key", sorted(ANN_RECALL_FLOORS))
-def test_ann_recall_floor_vs_brute_force(spark, sf_dir, key):
+def test_ann_recall_floor_vs_brute_force(spark, sf_dir, key, topk_ids):
     """recall@10 against the llm_sim_topk exact ground truth, per ANN
     variant at its fixed probe budget (VERDICT r4 next-round #5; r9
     #4 raised the weak floors and made them per-SF)."""
     floor = _floor_for(ANN_RECALL_FLOORS[key], sf_dir)
-    gt = {r["vec_id"] for r in QUERIES["llm_sim_topk"](spark, sf_dir).collect()}
+    gt = set(topk_ids)
     got = {r["vec_id"] for r in QUERIES[key](spark, sf_dir).collect()}
     recall = len(got & gt) / len(gt)
     assert recall >= floor, f"{key}: recall@10 {recall:.2f} < {floor}"
@@ -744,8 +748,6 @@ def test_mm_image_resize_decodes_every_synthesized_payload(spark, sf_dir):
     """The in-column PGM synthesis must produce payloads the strict
     sniff accepts — every row decodes, source dims are 16x16, and the
     checksum is bounded by 255 * 8 * 8 * 3 (PGM expands to 3 chan)."""
-    from osm_airflow_spark.registry import QUERIES
-
     rows = QUERIES["mm_image_resize"](spark, sf_dir).collect()
     assert rows and all(r.decoded for r in rows)
     assert all(r.src_w == 16 and r.src_h == 16 for r in rows)
@@ -756,8 +758,6 @@ def test_llm_domain_mix_weights_sum_to_one(spark, sf_dir):
     """Mixture weights are a probability vector, and the 0.7
     temperature strictly compresses the spread: the max/min weight
     ratio is below the max/min count ratio."""
-    from osm_airflow_spark.registry import QUERIES
-
     rows = QUERIES["llm_domain_mix"](spark, sf_dir).collect()
     total = sum(r.mix_weight for r in rows)
     assert abs(total - 1.0) < 1e-9
@@ -773,7 +773,6 @@ def test_llm_dedup_incremental_never_reemits_base_content(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from osm_airflow_spark.io import load_table
-    from osm_airflow_spark.registry import QUERIES
 
     surv = QUERIES["llm_dedup_incremental"](spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
@@ -802,7 +801,6 @@ def test_graph_connected_components_matches_bruteforce(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from osm_airflow_spark.io import load_table
-    from osm_airflow_spark.registry import QUERIES
 
     li = load_table(spark, sf_dir, "lineitem")
     a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
@@ -1227,8 +1225,6 @@ def test_distinct_ngrams_single_word(spark, tmp_path):
     [1, 0], so the r8 bigram build CRASHED on single-word docs while
     the oracle returned n_bigrams=0. Both engines must now agree on
     every short-doc shape."""
-    from osm_airflow_spark.registry import ORACLES, QUERIES
-
     sf_dir, con = _write_short_docs(spark, tmp_path)
     got = {
         r["doc_id"]: (r["n_bigrams"], r["distinct_bigrams"], r["distinct_ratio"])
@@ -1248,8 +1244,6 @@ def test_fingerprint_short_docs(spark, tmp_path):
     one gram for docs < 8 chars from out-of-range reads, where Spark
     ascii('') = 0 but DuckDB unicode('') = -1. Short docs must now
     emit an EMPTY fingerprint identically in both engines."""
-    from osm_airflow_spark.registry import ORACLES, QUERIES
-
     sf_dir, con = _write_short_docs(spark, tmp_path)
     got = {
         r["doc_id"]: (r["n_fingerprints"], r["min_fp"], r["fp_checksum"])
@@ -1273,8 +1267,6 @@ def test_bigram_keys_short_docs(spark, tmp_path):
     oracle's generate_series(1, n-1) emits nothing. All three
     bigram-based keys must now match the oracle exactly on a fixture
     with empty and single-word docs."""
-    from osm_airflow_spark.registry import ORACLES, QUERIES
-
     sf_dir, con = _write_short_docs(spark, tmp_path)
     for key in ("llm_bigram_lm", "llm_kneser_ney", "llm_perplexity_filter"):
         got = sorted(tuple(r) for r in QUERIES[key](spark, sf_dir).collect())
@@ -1298,7 +1290,9 @@ def test_bigram_keys_short_docs(spark, tmp_path):
     }
 
 
-def test_graph_index_build_query_prune_and_recall(spark, sf_dir, tmp_path):
+def test_graph_index_build_query_prune_and_recall(
+    spark, sf_dir, tmp_path, topk_ids
+):
     """Persisted graph-ANN lifecycle (r9 — the VERDICT r8 serve-path
     gap): build the NN-Descent graph ONCE into a bucket-partitioned
     edge+vector layout, then beam-probe it. The probe's edge scan
@@ -1340,7 +1334,7 @@ def test_graph_index_build_query_prune_and_recall(spark, sf_dir, tmp_path):
     n_total = len(spark.read.parquet(f"{index_dir}/edges").inputFiles())
     assert 0 < n_read < n_total
 
-    gt = {r["vec_id"] for r in QUERIES["llm_sim_topk"](spark, sf_dir).collect()}
+    gt = set(topk_ids)
     recall = len({r["vec_id"] for r in rows} & gt) / len(gt)
     assert recall >= _floor_for(ANN_RECALL_FLOORS["llm_sim_ann_graph"], sf_dir), recall
 
@@ -1356,8 +1350,6 @@ def test_zipf_fit_recovers_planted_power_law(spark, tmp_path):
     near-uniform, so the hash gate alone never exercises a true power
     law), and Spark must equal the DuckDB oracle on this corpus too."""
     import duckdb
-
-    from osm_airflow_spark.registry import ORACLES, QUERIES
 
     words = [f"w{i:02d}" for i in range(1, 26)]
     toks = []
@@ -1461,8 +1453,6 @@ def test_corpus_divergence_semantics_on_planted_sources(spark, tmp_path):
     import math
 
     import duckdb
-
-    from osm_airflow_spark.registry import ORACLES, QUERIES
 
     common = "alpha beta gamma delta " * 25
     rows = (
@@ -1581,13 +1571,9 @@ def test_embed_outliers_flags_planted_corruption(spark, sf_dir):
         ).alias("embedding"),
     )
     union = e.unionByName(corrupt.select(*e.columns))
-    from osm_airflow_spark.registry import clear_plan_cache
 
     orig = sim.load_table
     sim.load_table = lambda sp, sd, t: union if t == "embeddings" else orig(sp, sd, t)
-    clear_plan_cache()  # the plan cache would serve the unpatched
-    # plan (r10: this test caught exactly that) — and must not keep
-    # the patched one afterwards
     try:
         flagged = {
             r["vec_id"]: r["is_outlier"]
@@ -1595,11 +1581,10 @@ def test_embed_outliers_flags_planted_corruption(spark, sf_dir):
         }
     finally:
         sim.load_table = orig
-        clear_plan_cache()
     assert flagged[990001] is True
 
 
-def test_graph_index_incremental_add(spark, sf_dir, tmp_path):
+def test_graph_index_incremental_add(spark, sf_dir, tmp_path, topk_ids):
     """r9: HNSW-shape incremental insert — build on 80% of vectors,
     batch-add the rest. The vectors layout must cover the full
     corpus, every added node must have bidirectional links (that is
@@ -1639,7 +1624,7 @@ def test_graph_index_incremental_add(spark, sf_dir, tmp_path):
     rows = query_graph_index(
         spark, index_dir, qvec, beam_w=24, hops=6, topk=10, exclude_ids=(0,)
     ).collect()
-    gt = {r["vec_id"] for r in QUERIES["llm_sim_topk"](spark, sf_dir).collect()}
+    gt = set(topk_ids)
     recall = len({r["vec_id"] for r in rows} & gt) / len(gt)
     assert recall >= _floor_for(ANN_RECALL_FLOORS["llm_sim_ann_graph"], sf_dir), recall
 
@@ -1651,8 +1636,6 @@ def test_eval_rank_metrics_invariants_and_guards(spark, sf_dir, tmp_path):
     none of the query terms, so every grade is 0 and the key must
     emit NULL ndcg / 0.0 mrr in BOTH engines rather than divide by
     zero."""
-    from osm_airflow_spark.registry import ORACLES, QUERIES
-
     row = QUERIES["llm_eval_rank_metrics"](spark, sf_dir).collect()[0]
     assert row["n_retrieved"] == 20
     assert 0 <= row["n_rel_top"] <= row["n_retrieved"]
@@ -1681,8 +1664,6 @@ def test_eval_auc_matches_pure_python_midrank_formula(spark, sf_dir):
     mistake in the rank-sum identity."""
     import duckdb
 
-    from osm_airflow_spark.registry import QUERIES
-
     row = QUERIES["llm_eval_auc"](spark, sf_dir).collect()[0]
     import os
 
@@ -1693,7 +1674,6 @@ def test_eval_auc_matches_pure_python_midrank_formula(spark, sf_dir):
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{p}')"
     )
-    from osm_airflow_spark.registry import ORACLES
 
     sql = ORACLES["llm_eval_auc"]
     labeled_sql = sql[: sql.index("by_score")].rstrip().rstrip(",")
@@ -1725,8 +1705,6 @@ def test_eval_bleu_kernel_against_pure_python(spark, tmp_path):
     exactly, and bleu must equal round(exp(log_bleu), 6)."""
     import math
     from collections import Counter
-
-    from osm_airflow_spark.registry import ORACLES, QUERIES
 
     short_dir, con = _write_short_docs(spark, tmp_path)
     got = QUERIES["llm_eval_bleu"](spark, short_dir).collect()[0]
@@ -1764,8 +1742,6 @@ def test_eval_bleu_fixture_sanity(spark, sf_dir):
     inside (0, 1): shorter than the reference (negative brevity term)
     yet with high unigram precision (every kept word appears in the
     reference)."""
-    from osm_airflow_spark.registry import QUERIES
-
     row = QUERIES["llm_eval_bleu"](spark, sf_dir).collect()[0]
     assert row["cand_tokens"] < row["ref_tokens"]
     assert row["p1"] == 1.0  # kept words are a sub-multiset of ref
@@ -1774,7 +1750,7 @@ def test_eval_bleu_fixture_sanity(spark, sf_dir):
 
 
 def test_graph_index_compaction_prunes_and_preserves_recall(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, topk_ids
 ):
     """After two insert batches bloat the edge table, compaction must
     (a) cut it back to ~fresh-build size with per-source fan-out <=
@@ -1836,7 +1812,7 @@ def test_graph_index_compaction_prunes_and_preserves_recall(
     rows = query_graph_index(
         spark, index_dir, qvec, beam_w=24, hops=6, topk=10, exclude_ids=(0,)
     ).collect()
-    gt = {r["vec_id"] for r in QUERIES["llm_sim_topk"](spark, sf_dir).collect()}
+    gt = set(topk_ids)
     recall = len({r["vec_id"] for r in rows} & gt) / len(gt)
     assert recall >= _floor_for(ANN_RECALL_FLOORS["llm_sim_ann_graph"], sf_dir), recall
 
@@ -1881,8 +1857,6 @@ def test_source_profile_planted_duplicates(spark, tmp_path):
     """A source stuffed with copy-pasted docs must show the low
     distinct ratio; the clean source stays at 1.0; token accounting
     is exact."""
-    from osm_airflow_spark.registry import QUERIES
-
     rows = [
         (1, "the same doc again and again", "en", "dupsrc", 28),
         (2, "the same doc again and again", "en", "dupsrc", 28),
@@ -1912,8 +1886,6 @@ def test_eval_rank_metrics_empty_corpus_matches_oracle(spark, tmp_path):
     agree row-for-row (NULL metrics, zero counts)."""
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES
-
     df = spark.createDataFrame([], "doc_id long, text string")
     path = str(tmp_path / "documents.parquet")
     df.coalesce(1).write.parquet(path)
@@ -1933,8 +1905,6 @@ def test_eval_rouge_matches_pure_python(spark, tmp_path):
     fixture, plus the precision identity with BLEU's p1 on the same
     pairing (same clipped unigram counts over the same candidates)."""
     from collections import Counter
-
-    from osm_airflow_spark.registry import ORACLES, QUERIES
 
     short_dir, con = _write_short_docs(spark, tmp_path)
     got = QUERIES["llm_eval_rouge"](spark, short_dir).collect()[0]
@@ -1969,8 +1939,6 @@ def test_mm_image_ahash_planted_near_dups(spark, tmp_path):
     its own bit (the mean drop keeps every other bit at 1); an
     half-split raster band-collides but fails the Hamming cut.
     Non-ASCII docs are fenced out by the byte-vs-char guard."""
-    from osm_airflow_spark.registry import QUERIES
-
     rows = [
         (1, "m" * 300),           # all bits 1
         (2, "m" * 300),           # exact dup -> hamming 0
@@ -1996,8 +1964,6 @@ def test_mixture_plan_temperature_properties(spark, tmp_path):
     temperature must LIFT the tail's share above proportional and
     CUT the head's below, shares must sum to 1, and budgeted rates
     must conserve the half-corpus token budget."""
-    from osm_airflow_spark.registry import QUERIES
-
     rows = []
     did = 0
     for i in range(64):  # head: 64 docs x 100 tokens
@@ -2031,8 +1997,6 @@ def test_mm_dedup_cluster_planted_chain(spark, tmp_path):
     pixel off both -> one cluster {1,2,3}; the longest-text member
     must survive (doc 3 padded longer), others drop; an unrelated doc
     and a non-ASCII doc pass through as singletons."""
-    from osm_airflow_spark.registry import QUERIES
-
     rows = [
         (1, "m" * 300),
         (2, "m" * 300),
@@ -2058,8 +2022,6 @@ def test_split_leakage_planted_cross_split_near_dup(spark, tmp_path):
     doc must NOT surface (same hash, same split — the content-hash
     guarantee)."""
     import hashlib
-
-    from osm_airflow_spark.registry import QUERIES
 
     words = [f"tok{i}" for i in range(30)]
     base = " ".join(words)
@@ -2824,8 +2786,6 @@ def test_cluster_silhouette_separated_vs_mixed(spark, tmp_path):
     (≈1); the same blobs with all scores re-assigned to ONE cluster
     shape (seeds inside a single blob) degrade. Uses a tiny synthetic
     embeddings table through the registered key end to end."""
-    from osm_airflow_spark.registry import QUERIES, clear_plan_cache
-
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -2841,9 +2801,7 @@ def test_cluster_silhouette_separated_vs_mixed(spark, tmp_path):
     spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
-    clear_plan_cache()
     got = QUERIES["llm_cluster_silhouette"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert sum(r["n_vectors"] for r in got) == 40
     # every cluster's mean silhouette is high: tight blobs, far seeds
     for r in got:
@@ -2916,8 +2874,6 @@ def test_edit_distance_known_answers_and_symmetry(spark, tmp_path):
     guard; plus oracle replay."""
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     docs = [
         (0, "kitten"),
         (97, "sitting"),
@@ -2928,12 +2884,10 @@ def test_edit_distance_known_answers_and_symmetry(spark, tmp_path):
     spark.createDataFrame(docs, "doc_id long, text string").coalesce(
         1
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    clear_plan_cache()
     got = {
         (r["doc_a"], r["doc_b"]): (r["edit_distance"], r["edit_similarity"])
         for r in QUERIES["llm_edit_distance"](spark, str(tmp_path)).collect()
     }
-    clear_plan_cache()
     assert got[(0, 97)] == (3, 1.0 - 3.0 / 7.0)
     assert got[(97, 194)] == (5, 1.0 - 5.0 / 12.0)
     assert got[(194, 291)] == (0, 1.0)
@@ -2958,8 +2912,6 @@ def test_eval_mcc_hand_confusion_and_degenerate(spark, tmp_path):
     NULL, accuracy 1.0."""
     import math
 
-    from osm_airflow_spark.registry import QUERIES, clear_plan_cache
-
     texts = {
         "tp": ("en", "the cat of the house is in the garden"),  # en hits win
         "fn": ("en", "der hund und die katze ist ein tier"),    # de wins
@@ -2975,9 +2927,7 @@ def test_eval_mcc_hand_confusion_and_degenerate(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string"
     ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    clear_plan_cache()
     got = QUERIES["llm_eval_mcc"](spark, str(tmp_path)).first()
-    clear_plan_cache()
     tp, fn, fp, tn = reps["tp"], reps["fn"], reps["fp"], reps["tn"]
     assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (tp, fp, fn, tn)
     n = tp + fp + fn + tn
@@ -2993,9 +2943,7 @@ def test_eval_mcc_hand_confusion_and_degenerate(spark, tmp_path):
         [(i, "the a of and in to is", "en") for i in range(5)],
         "doc_id long, text string, lang string",
     ).coalesce(1).write.parquet(str(base2 / "documents.parquet"))
-    clear_plan_cache()
     g2 = QUERIES["llm_eval_mcc"](spark, str(base2)).first()
-    clear_plan_cache()
     assert g2["mcc"] is None and g2["accuracy"] == 1.0
 
 
@@ -3005,8 +2953,6 @@ def test_dup_size_histogram_planted_multiplicities(spark, tmp_path):
     0, 2/12, 4/12 — total removable 6/12 matches dedup keeping 6
     survivors. Oracle replayed."""
     import duckdb
-
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
 
     rows, did = [], 0
     for size, copies in ((1, 3), (2, 2), (5, 1)):
@@ -3018,14 +2964,12 @@ def test_dup_size_histogram_planted_multiplicities(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").coalesce(
         1
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    clear_plan_cache()
     got = {
         r["cluster_size"]: r
         for r in QUERIES["llm_dup_size_histogram"](
             spark, str(tmp_path)
         ).collect()
     }
-    clear_plan_cache()
     assert {(k, v["n_clusters"]) for k, v in got.items()} == {
         (1, 3), (2, 2), (5, 1)
     }
@@ -3053,8 +2997,6 @@ def test_heaps_law_closed_forms(spark, tmp_path):
     engines. Oracle replayed on all three."""
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def run(texts, sub):
         base = tmp_path / sub
         base.mkdir()
@@ -3062,9 +3004,7 @@ def test_heaps_law_closed_forms(spark, tmp_path):
             [(i, t) for i, t in enumerate(texts)],
             "doc_id long, text string",
         ).coalesce(1).write.parquet(str(base / "documents.parquet"))
-        clear_plan_cache()
         got = QUERIES["llm_heaps_law"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW documents AS SELECT * FROM read_parquet("
@@ -3138,8 +3078,6 @@ def test_pmi_collocations_hand_counts_and_floor(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows, did = [], 0
     for text, n in (("a b", 8), ("a c", 2), ("c b", 2), ("d d", 5)):
         for _ in range(n):
@@ -3147,9 +3085,7 @@ def test_pmi_collocations_hand_counts_and_floor(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").coalesce(
         1
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    clear_plan_cache()
     got = QUERIES["llm_pmi_collocations"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert [(r["w1"], r["w2"]) for r in got] == [("d", "d"), ("a", "b")]
     dd, ab = got
     assert (dd["n_pair"], dd["n_first"], dd["n_second"]) == (5, 5, 5)
@@ -3174,8 +3110,6 @@ def test_rake_keywords_hand_scores_and_cap(spark, tmp_path):
     length cap. Oracle replayed."""
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (1, "deep learning of deep learning"),
         (2, "fast data and deep learning is fast"),
@@ -3184,9 +3118,7 @@ def test_rake_keywords_hand_scores_and_cap(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").coalesce(
         1
     ).write.parquet(str(tmp_path / "documents.parquet"))
-    clear_plan_cache()
     got = QUERIES["llm_rake_keywords"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert [(r["phrase"], r["n_words"], r["n_occ"], r["score"])
             for r in got] == [
         ("deep learning", 2, 3, 4.0),

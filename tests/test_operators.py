@@ -4,9 +4,10 @@ empty groups, window ties, dedup idempotence."""
 
 from pyspark.sql import functions as F
 
-from osm_airflow_spark.registry import all_queries
+from osm_airflow_spark.registry import all_oracles, all_queries
 
 QUERIES = all_queries()
+ORACLES = all_oracles()
 
 
 def test_ordered_collect_with_duplicate_positions(spark):
@@ -1555,8 +1556,6 @@ def test_win_atr_hand_fixture(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (i, datetime.date(2024, 1, 1 + i), 1000.0 + 10.0 * i)
         for i in range(16)
@@ -1564,9 +1563,7 @@ def test_win_atr_hand_fixture(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date, o_totalprice double"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = QUERIES["win_atr"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     # rn numbers DAYS (day 1 drops with its NULL prev-close), so TR
     # rows carry rn 2..16 and day 15 (rn 15) already owns TRs 2..15 —
     # a full 14-TR frame: days 15 and 16 emit
@@ -1663,8 +1660,6 @@ def test_agg_moments_closed_form_distributions(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = []
     k = 0
     for _ in range(10):  # symmetric two-point: 100 and 300
@@ -1679,12 +1674,10 @@ def test_agg_moments_closed_form_distributions(spark, tmp_path):
         "o_orderkey long, o_orderdate date, o_orderpriority string,"
         " o_totalprice double",
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = {
         r["prio"]: r
         for r in QUERIES["agg_moments"](spark, str(tmp_path)).collect()
     }
-    clear_plan_cache()
     assert got["A-SYM"]["skewness"] == 0.0
     assert got["A-SYM"]["excess_kurtosis"] == -2.0
     assert got["A-SYM"]["mean_price"] == 200.0
@@ -1710,8 +1703,6 @@ def test_win_donchian_rising_series_and_gap(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def run(days, sub):
         base = tmp_path / sub
         base.mkdir()
@@ -1723,9 +1714,7 @@ def test_win_donchian_rising_series_and_gap(spark, tmp_path):
         spark.createDataFrame(
             rows, "o_orderkey long, o_orderdate date, o_totalprice double"
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
-        clear_plan_cache()
         got = QUERIES["win_donchian"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -1757,8 +1746,6 @@ def test_win_obv_hand_fixture(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (1, datetime.date(2024, 1, 1), 100.0),
         (2, datetime.date(2024, 1, 2), 110.0),
@@ -1771,9 +1758,7 @@ def test_win_obv_hand_fixture(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date, o_totalprice double"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = QUERIES["win_obv"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert [(r["day"], r["flow"], r["obv"]) for r in got] == [
         ("2024-01-02", 1, 1),
         ("2024-01-03", 2, 3),
@@ -1799,8 +1784,6 @@ def test_win_aroon_rising_and_flat(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def run(prices, sub):
         base = tmp_path / sub
         base.mkdir()
@@ -1811,9 +1794,7 @@ def test_win_aroon_rising_and_flat(spark, tmp_path):
         spark.createDataFrame(
             rows, "o_orderkey long, o_orderdate date, o_totalprice double"
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
-        clear_plan_cache()
         got = QUERIES["win_aroon"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -1846,8 +1827,6 @@ def test_win_vwap_monthly_anchor_resets(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (datetime.date(2024, 1, 1), 20.0, 2.0),   # extprice = price*qty
         (datetime.date(2024, 1, 2), 40.0, 2.0),
@@ -1856,9 +1835,7 @@ def test_win_vwap_monthly_anchor_resets(spark, tmp_path):
     spark.createDataFrame(
         rows, "l_shipdate date, l_extendedprice double, l_quantity double"
     ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     got = QUERIES["win_vwap"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert [(r["day"], r["cum_qty"], r["vwap"]) for r in got] == [
         ("2024-01-01", 2, 10.0),
         ("2024-01-02", 4, 15.0),
@@ -1960,8 +1937,6 @@ def test_weighted_median_hand_and_missing_flag(spark, tmp_path):
     the fixture emits no row. Oracle replayed."""
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (10.0, 1.0, "A"),
         (20.0, 2.0, "A"),
@@ -1971,12 +1946,10 @@ def test_weighted_median_hand_and_missing_flag(spark, tmp_path):
     spark.createDataFrame(
         rows, "l_extendedprice double, l_quantity double, l_returnflag string"
     ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     got = {
         r["l_returnflag"]: r
         for r in QUERIES["agg_weighted_median"](spark, str(tmp_path)).collect()
     }
-    clear_plan_cache()
     assert set(got) == {"A", "N"}
     assert got["A"]["total_qty"] == 4 and got["A"]["median_price"] == 20.0
     assert got["N"]["total_qty"] == 5 and got["N"]["median_price"] == 77.0
@@ -1999,8 +1972,6 @@ def test_agg_histogram_edges_clamp_and_degenerate(spark, tmp_path):
     replayed."""
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def run(prices, sub):
         base = tmp_path / sub
         base.mkdir()
@@ -2008,9 +1979,7 @@ def test_agg_histogram_edges_clamp_and_degenerate(spark, tmp_path):
             [(i, p) for i, p in enumerate(prices)],
             "o_orderkey long, o_totalprice double",
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
-        clear_plan_cache()
         got = QUERIES["agg_histogram"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -2039,8 +2008,6 @@ def test_win_stochastic_rising_series(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (i, datetime.date(2024, 1, 1) + datetime.timedelta(days=i),
          1000.0 + 10.0 * i)
@@ -2049,10 +2016,8 @@ def test_win_stochastic_rising_series(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date, o_totalprice double"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = {r["day"]: r for r in
            QUERIES["win_stochastic"](spark, str(tmp_path)).collect()}
-    clear_plan_cache()
     assert len(got) == 5  # days 14..18 own full frames
     for day, r in got.items():
         assert r["pct_k"] == 100.0
@@ -2080,8 +2045,6 @@ def test_win_ichimoku_rising_series(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (i, datetime.date(2024, 1, 1) + datetime.timedelta(days=i),
          1000.0 + 10.0 * i)
@@ -2090,10 +2053,8 @@ def test_win_ichimoku_rising_series(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date, o_totalprice double"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = {r["day"]: r for r in
            QUERIES["win_ichimoku"](spark, str(tmp_path)).collect()}
-    clear_plan_cache()
     assert len(got) == 4  # days 52..55 (indices 51..54)
     r = got["2024-02-24"]  # index 54, price 1540
     assert r["tenkan"] == (1540.0 + 1460.0) / 2   # 9-day: idx 46..54
@@ -2121,8 +2082,6 @@ def test_win_pivot_points_hand_fixture(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (1, datetime.date(2024, 1, 1), 120.0),
         (2, datetime.date(2024, 1, 1), 80.0),
@@ -2132,9 +2091,7 @@ def test_win_pivot_points_hand_fixture(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date, o_totalprice double"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = QUERIES["win_pivot_points"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert len(got) == 1
     r = got[0]
     assert r["day"] == "2024-01-02"
@@ -2308,8 +2265,6 @@ def test_win_mfi_rising_flat_down_hand(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def build(base, prices):
         base.mkdir()
         rows = [
@@ -2321,9 +2276,7 @@ def test_win_mfi_rising_flat_down_hand(spark, tmp_path):
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
 
     def run(base):
-        clear_plan_cache()
         got = QUERIES["win_mfi"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -2376,7 +2329,6 @@ def test_win_macd_constant_and_ramp_closed_forms(spark, tmp_path):
     import duckdb
 
     from osm_airflow_spark.operators.windows import _MACD_FAST, _MACD_SLOW
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
 
     def build(base, prices):
         base.mkdir()
@@ -2389,9 +2341,7 @@ def test_win_macd_constant_and_ramp_closed_forms(spark, tmp_path):
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
 
     def run(base):
-        clear_plan_cache()
         got = QUERIES["win_macd"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -2439,8 +2389,6 @@ def test_win_ulcer_index_flat_and_single_dip(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def build(base, prices):
         base.mkdir()
         d0 = datetime.date(2024, 1, 1)
@@ -2453,9 +2401,7 @@ def test_win_ulcer_index_flat_and_single_dip(spark, tmp_path):
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
 
     def run(base):
-        clear_plan_cache()
         got = QUERIES["win_ulcer_index"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -2503,7 +2449,7 @@ def test_graph_hits_integer_replica_and_star(spark, sf_dir, tmp_path):
     import datetime
 
     from osm_airflow_spark.operators.graph import trade_edges_directed
-    from osm_airflow_spark.registry import all_queries, clear_plan_cache
+    from osm_airflow_spark.registry import all_queries
 
     SCALE = 10**6
 
@@ -2551,12 +2497,10 @@ def test_graph_hits_integer_replica_and_star(spark, sf_dir, tmp_path):
         [(100, 1, d), (200, 1, d), (300, 1, d)],
         "l_orderkey long, l_suppkey long, l_shipdate date",
     ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     star = {
         r["node"]: (r["hub"], r["authority"])
         for r in all_queries()["graph_hits"](spark, str(tmp_path)).collect()
     }
-    clear_plan_cache()
     assert star["A"] == (1.0, 0.0)
     for leaf in ("B", "C", "D"):
         assert star[leaf] == (0.0, 1.0)
@@ -2573,8 +2517,6 @@ def test_win_parkinson_flat_and_constant_range(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def build(base, two_level):
         base.mkdir()
         d0 = datetime.date(2024, 1, 1)
@@ -2589,9 +2531,7 @@ def test_win_parkinson_flat_and_constant_range(spark, tmp_path):
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
 
     def run(base):
-        clear_plan_cache()
         got = QUERIES["win_parkinson"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("

@@ -1116,7 +1116,7 @@ def test_osm_polygon_clip_key_invariants(spark, sf_dir):
     oracled rectangle key agrees with shoelace for fully-inside
     rings (clip == ring there)."""
     from osm_airflow_spark.plans.osm_queries import _HEX_WINDOW
-    from osm_airflow_spark.registry import QUERIES, clear_plan_cache
+    from osm_airflow_spark.registry import QUERIES
 
     rows = QUERIES["osm_polygon_clip"](spark, sf_dir).collect()
     assert rows
@@ -1277,7 +1277,7 @@ def test_osm_junctions_planted_topology(spark, tmp_path):
     node 20 on three (tee), node 30 on four (major), node 40 on one
     way only (not a junction); a repeated reference within ONE way
     must not inflate its count (DISTINCT guard)."""
-    from osm_airflow_spark.registry import QUERIES, clear_plan_cache
+    from osm_airflow_spark.registry import QUERIES
 
     rows = []
     # way 1 references node 40 twice -> still only one way for 40
@@ -1293,12 +1293,10 @@ def test_osm_junctions_planted_topology(spark, tmp_path):
     spark.createDataFrame(rows, "l_orderkey long, l_partkey long").coalesce(
         1
     ).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     got = {
         r["node_id"]: r
         for r in QUERIES["osm_junctions"](spark, str(tmp_path)).collect()
     }
-    clear_plan_cache()
     assert set(got) == {10, 20, 30}
     assert got[10]["n_ways"] == 2 and got[10]["junction_class"] == "crossing"
     assert got[20]["n_ways"] == 3 and got[20]["junction_class"] == "tee"

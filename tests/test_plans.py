@@ -9,9 +9,10 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
-from osm_airflow_spark.registry import all_queries
+from osm_airflow_spark.registry import all_oracles, all_queries
 
 QUERIES = all_queries()
+ORACLES = all_oracles()
 
 
 def plan_of(spark, sf_dir, key) -> str:
@@ -219,7 +220,6 @@ def test_partition_count_independence(spark, sf_dir, key, monkeypatch):
     full-gate runs; these eight keys cover the aggregation, window,
     rank, prefix-sum, percentile, and top-k families in CI."""
     import osm_airflow_spark.session as sess
-    from osm_airflow_spark.registry import QUERIES
 
     def canon(df):
         return sorted(
@@ -242,8 +242,6 @@ def test_concurrent_queries_share_one_session_safely(spark, sf_dir):
     scan plan) just wastes one build; this test would catch either a
     corrupted cache entry or cross-thread conf bleed."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from osm_airflow_spark.registry import QUERIES
 
     keys = [
         "agg_groupby",
@@ -1997,8 +1995,6 @@ def test_page_hinkley_excludes_null_ts(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES
-
     rows = []
     eid = 0
     for d, val in enumerate([10.0, 10.0, 50.0, 50.0, 50.0]):
@@ -2086,8 +2082,6 @@ def test_mann_kendall_planted_trend_and_ties(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     runs = iter(("a", "b"))
 
     def run(prices):
@@ -2104,9 +2098,7 @@ def test_mann_kendall_planted_trend_and_ties(spark, tmp_path):
         spark.createDataFrame(
             rows, "o_orderkey long, o_orderdate date, o_totalprice double"
         ).coalesce(1).write.parquet(str(out))
-        clear_plan_cache()
         got = QUERIES["pipeline_mann_kendall"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -2140,8 +2132,6 @@ def test_seasonality_strength_pure_cases(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     offsets = [0, 50, -30, 80, 10, -60, 40, -20, 70, -50, 20, -10]
     cases = {
         "seasonal": lambda mi: 1000.0 + offsets[mi % 12],
@@ -2157,11 +2147,9 @@ def test_seasonality_strength_pure_cases(spark, tmp_path):
         spark.createDataFrame(
             rows, "o_orderkey long, o_orderdate date, o_totalprice double"
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
-        clear_plan_cache()
         got = QUERIES["pipeline_seasonality_strength"](
             spark, str(base)
         ).collect()
-        clear_plan_cache()
         assert len(got) == 1
         r = got[0]
         assert r["n_months"] == 24  # 36 months minus 6 trimmed each end
@@ -2191,8 +2179,6 @@ def test_levene_closed_forms_and_weekday_gate(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def write(days, sub):
         base = tmp_path / sub
         base.mkdir()
@@ -2211,9 +2197,7 @@ def test_levene_closed_forms_and_weekday_gate(spark, tmp_path):
         return base
 
     full = write(range(1, 8), "full")
-    clear_plan_cache()
     got = QUERIES["pipeline_levene"](spark, str(full)).collect()
-    clear_plan_cache()
     assert len(got) == 1
     r = got[0]
     assert r["n"] == 28 and r["k"] == 7
@@ -2229,9 +2213,7 @@ def test_levene_closed_forms_and_weekday_gate(spark, tmp_path):
     ).fetchall()
 
     gapped = write(range(1, 7), "gapped")  # Sunday missing
-    clear_plan_cache()
     assert QUERIES["pipeline_levene"](spark, str(gapped)).count() == 0
-    clear_plan_cache()
 
 
 def test_levene_detects_planted_heteroscedasticity(spark, tmp_path):
@@ -2242,8 +2224,6 @@ def test_levene_detects_planted_heteroscedasticity(spark, tmp_path):
     import datetime
 
     import duckdb
-
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
 
     def write(spread_vals, sub):
         base = tmp_path / sub
@@ -2264,9 +2244,7 @@ def test_levene_detects_planted_heteroscedasticity(spark, tmp_path):
         return base
 
     base = write([0.0, 200.0, 90.0, 110.0] * 5, "spread")
-    clear_plan_cache()
     got = QUERIES["pipeline_levene"](spark, str(base)).collect()
-    clear_plan_cache()
     assert len(got) == 1 and got[0]["f_stat"] > 20.0
     con = duckdb.connect()
     con.execute(
@@ -2281,9 +2259,7 @@ def test_levene_detects_planted_heteroscedasticity(spark, tmp_path):
     # F undefined: NULL in BOTH engines, never an ANSI crash (this
     # exact shape crashed the unguarded draft with DIVIDE_BY_ZERO)
     dg = write([0.0, 200.0] * 10, "degen")
-    clear_plan_cache()
     got_d = QUERIES["pipeline_levene"](spark, str(dg)).collect()
-    clear_plan_cache()
     assert len(got_d) == 1
     assert got_d[0]["ss_within"] == 0.0 and got_d[0]["f_stat"] is None
     con2 = duckdb.connect()
@@ -2306,8 +2282,6 @@ def test_tukey_hsd_null_and_planted_shift(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = []
     eid = 0
     for d in range(1, 8):
@@ -2321,9 +2295,7 @@ def test_tukey_hsd_null_and_planted_shift(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string,"
         " value double, props string",
     ).coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
-    clear_plan_cache()
     got = QUERIES["pipeline_tukey_hsd"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert len(got) == 21
     # day index 4 (Friday, d=5 → weekday()=4) is the shifted group
     for r in got:
@@ -2352,8 +2324,6 @@ def test_lorenz_hand_deciles_and_equality_line(spark, tmp_path):
     included). Oracle replayed on both."""
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def run(revs, sub):
         base = tmp_path / sub
         base.mkdir()
@@ -2367,9 +2337,7 @@ def test_lorenz_hand_deciles_and_equality_line(spark, tmp_path):
         spark.createDataFrame(
             items, "l_orderkey long, l_extendedprice double, l_discount double"
         ).coalesce(1).write.parquet(str(base / "lineitem.parquet"))
-        clear_plan_cache()
         got = QUERIES["pipeline_lorenz"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         for t in ("orders", "lineitem"):
             con.execute(
@@ -2403,8 +2371,6 @@ def test_newsvendor_hand_fractiles(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = []
     okey = 0
     # 1-URGENT: four days with 1,1,1,2 orders
@@ -2422,12 +2388,10 @@ def test_newsvendor_hand_fractiles(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date, o_orderpriority string"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = {
         r["o_orderpriority"]: r
         for r in QUERIES["pipeline_newsvendor"](spark, str(tmp_path)).collect()
     }
-    clear_plan_cache()
     assert set(got) == {"1-URGENT", "5-LOW"}  # absent priorities drop
     u = got["1-URGENT"]
     assert (u["n_days"], u["total_demand"], u["q_opt"]) == (4, 5, 1)
@@ -2458,8 +2422,6 @@ def test_hurst_closed_forms(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def run(thousands, sub):
         base = tmp_path / sub
         base.mkdir()
@@ -2471,9 +2433,7 @@ def test_hurst_closed_forms(spark, tmp_path):
         spark.createDataFrame(
             rows, "o_orderkey long, o_orderdate date, o_totalprice double"
         ).coalesce(1).write.parquet(str(base / "orders.parquet"))
-        clear_plan_cache()
         got = QUERIES["pipeline_hurst"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW orders AS SELECT * FROM read_parquet("
@@ -2506,8 +2466,6 @@ def test_little_law_hand_window(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     orders = [
         (1, datetime.date(1997, 3, 1)),    # arrival, span 10
         (2, datetime.date(1997, 6, 1)),    # arrival, span 20
@@ -2527,9 +2485,7 @@ def test_little_law_hand_window(spark, tmp_path):
     spark.createDataFrame(
         items, "l_orderkey long, l_shipdate date"
     ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     got = QUERIES["pipeline_little_law"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert len(got) == 1
     r = got[0]
     assert r["n_arrivals"] == 2
@@ -2556,17 +2512,13 @@ def test_eoq_closed_form(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     spark.createDataFrame(
         [(1, "BRAND#A"), (2, "BRAND#B")], "p_partkey long, p_brand string"
     ).coalesce(1).write.parquet(str(tmp_path / "part.parquet"))
     spark.createDataFrame(
         [(1, 500.0), (1, 300.0)], "l_partkey long, l_quantity double"
     ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     got = QUERIES["pipeline_eoq"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert len(got) == 1  # BRAND#B never shipped
     r = got[0]
     assert r["brand"] == "BRAND#A" and r["d_units"] == 800
@@ -2595,8 +2547,6 @@ def test_abc_migration_planted_transitions(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     e1 = datetime.date(1997, 5, 1)
     e2 = datetime.date(1999, 5, 1)
     rows = [
@@ -2608,14 +2558,12 @@ def test_abc_migration_planted_transitions(spark, tmp_path):
         "l_partkey long, l_extendedprice double, l_discount double,"
         " l_shipdate date",
     ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     got = {
         (r["class_before"], r["class_after"]): r
         for r in QUERIES["pipeline_abc_migration"](
             spark, str(tmp_path)
         ).collect()
     }
-    clear_plan_cache()
     assert set(got) == {("A", "-"), ("B", "A"), ("C", "B"), ("-", "C")}
     assert all(r["n_parts"] == 1 and r["moved"] is True for r in got.values())
     con = duckdb.connect()
@@ -2638,8 +2586,6 @@ def test_control_chart_planted_excursion(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = []
     okey = 0
     for d in range(30):
@@ -2655,10 +2601,8 @@ def test_control_chart_planted_excursion(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = {r["day"]: r for r in
            QUERIES["pipeline_control_chart"](spark, str(tmp_path)).collect()}
-    clear_plan_cache()
     assert len(got) == 31
     flagged = {d for d, r in got.items() if r["out_of_control"]}
     assert flagged == {"2024-02-15"}
@@ -2686,8 +2630,6 @@ def test_xmr_chart_planted_spike(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = []
     for d in range(30):
         rows.append(
@@ -2698,10 +2640,8 @@ def test_xmr_chart_planted_spike(spark, tmp_path):
     spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate date, o_totalprice double"
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = {r["day"]: r for r in
            QUERIES["pipeline_xmr_chart"](spark, str(tmp_path)).collect()}
-    clear_plan_cache()
     assert len(got) == 30  # day 1 anchors
     assert got["2024-01-02"]["moving_range"] == 10.0
     assert got["2024-01-31"]["x"] == 5000.0
@@ -2730,8 +2670,6 @@ def test_mcnemar_hand_cells_and_degenerate(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def build(base, custs_97, custs_98, n_cust):
         base.mkdir()
         rows, ok = [], 1
@@ -2747,9 +2685,7 @@ def test_mcnemar_hand_cells_and_degenerate(spark, tmp_path):
         ).coalesce(1).write.parquet(str(base / "customer.parquet"))
 
     def run(base):
-        clear_plan_cache()
         got = QUERIES["pipeline_mcnemar"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         for t in ("orders", "customer"):
             con.execute(
@@ -2784,8 +2720,6 @@ def test_cochran_q_hand_blocks_and_degenerate(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def build(base, actives, n_cust):
         base.mkdir()
         rows, ok = [], 1
@@ -2800,9 +2734,7 @@ def test_cochran_q_hand_blocks_and_degenerate(spark, tmp_path):
         ).coalesce(1).write.parquet(str(base / "customer.parquet"))
 
     def run(base):
-        clear_plan_cache()
         got = QUERIES["pipeline_cochran_q"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         for t in ("orders", "customer"):
             con.execute(
@@ -2841,8 +2773,6 @@ def test_nrr_hand_churn_expansion_new(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     rows = [
         (1, 1, datetime.date(1996, 2, 1), 100.0),
         (2, 2, datetime.date(1996, 3, 1), 200.0),
@@ -2854,9 +2784,7 @@ def test_nrr_hand_churn_expansion_new(spark, tmp_path):
         "o_orderkey long, o_custkey long, o_orderdate date,"
         " o_totalprice double",
     ).coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    clear_plan_cache()
     got = QUERIES["pipeline_nrr"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert len(got) == 1
     r = got[0]
     assert (r["year"], r["n_base"], r["n_retained"]) == (1996, 2, 1)
@@ -2883,8 +2811,6 @@ def test_erlang_c_hand_rationals_and_clamp(spark, tmp_path):
     import duckdb
     import pytest
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     def build(base, type_counts, n_days=10):
         base.mkdir()
         rows, eid = [], 0
@@ -2905,9 +2831,7 @@ def test_erlang_c_hand_rationals_and_clamp(spark, tmp_path):
         ).coalesce(1).write.parquet(str(base / "events.parquet"))
 
     def run(base):
-        clear_plan_cache()
         got = QUERIES["pipeline_erlang_c"](spark, str(base)).collect()
-        clear_plan_cache()
         con = duckdb.connect()
         con.execute(
             "CREATE VIEW events AS SELECT * FROM read_parquet("
@@ -2968,8 +2892,6 @@ def test_price_index_hand_basket_and_cent_rounding(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     li = []  # (l_partkey, l_shipdate, l_quantity, l_extendedprice)
     d96, d97 = datetime.date(1996, 6, 1), datetime.date(1997, 6, 1)
     li += [(1, d96, 10.0, 100.0), (1, d97, 5.0, 60.0)]
@@ -2985,11 +2907,9 @@ def test_price_index_hand_basket_and_cent_rounding(spark, tmp_path):
         [(1, "X"), (2, "X"), (3, "Y"), (4, "X")],
         "p_partkey long, p_brand string",
     ).coalesce(1).write.parquet(str(tmp_path / "part.parquet"))
-    clear_plan_cache()
     got = {r["p_brand"]: r
            for r in QUERIES["pipeline_price_index"](spark, str(tmp_path))
            .collect()}
-    clear_plan_cache()
     x = got["X"]
     assert x["n_parts"] == 2
     assert x["laspeyres"] == 15200.0 / 14000
@@ -3049,8 +2969,6 @@ def test_skyline_hand_dominance(spark, tmp_path):
 
     import duckdb
 
-    from osm_airflow_spark.registry import ORACLES, QUERIES, clear_plan_cache
-
     d = datetime.date(1997, 1, 1)
     li = [  # one lineitem per part: qty=v, extprice = p*v dollars
         (1, d, 10.0, 50.0),      # $5, v=10       -> keep
@@ -3065,9 +2983,7 @@ def test_skyline_hand_dominance(spark, tmp_path):
         "l_partkey long, l_shipdate date, l_quantity double,"
         " l_extendedprice double",
     ).coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    clear_plan_cache()
     got = QUERIES["pipeline_skyline"](spark, str(tmp_path)).collect()
-    clear_plan_cache()
     assert sorted((r["unit_price"], r["volume"], r["n_parts"])
                   for r in got) == [
         (5.0, 10, 1), (10.0, 100, 2), (20.0, 200, 1),

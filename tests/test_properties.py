@@ -2,6 +2,8 @@
 hypothesis-generated inputs — the operator-interaction bugs example
 tables can't catch."""
 
+from decimal import ROUND_HALF_UP, Decimal
+
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -504,3 +506,70 @@ def test_conformal_histogram_dominates_exact(spark, resids, width):
     assert row["n_cal"] == n
     assert row["q_hist"] >= exact
     assert row["q_hist"] - exact <= width + 1e-9
+
+
+def _micros_ref(x: float) -> int:
+    """Spark's ``round(double, 6)`` in micro-units: HALF_UP on the
+    shortest repr of the double (BigDecimal.valueOf semantics)."""
+    q = Decimal(repr(x)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+    return int(q.scaleb(6))
+
+
+def _band_edge(k: int, sign: int, side: int, ulps: int) -> float:
+    """A value whose ×1e6 scaling sits on (±``ulps``) the edge of the
+    fast path's midpoint-fallback band, ``1e-6 + 8*spacing``."""
+    import numpy as np
+
+    half = k + 0.5
+    x = np.float64((half + side * (1e-6 + 8.0 * np.spacing(half))) / 1e6)
+    for _ in range(abs(ulps)):
+        x = np.nextafter(x, np.copysign(np.inf, ulps))
+    return sign * float(x)
+
+
+_signs = st.sampled_from([1, -1])
+_micro_values = st.one_of(
+    # exact scale-6 midpoints (2k+1)·5e-7, nearest double
+    st.builds(
+        lambda k, s: s * float((2 * k + 1) * Decimal("5e-7")),
+        st.integers(0, 2_000_000_000),
+        _signs,
+    ),
+    st.builds(
+        _band_edge,
+        st.integers(0, 1_000_000_000),
+        _signs,
+        st.sampled_from([-1, 1]),
+        st.integers(-1, 1),
+    ),
+    st.just(-0.0),
+    st.floats(-1e3, 1e3, allow_nan=False, allow_infinity=False),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(batches=st.lists(st.lists(_micro_values, max_size=8), max_size=4))
+def test_gram_micro_partials_match_decimal_half_up(batches):
+    """The covariance kernel's vectorized micro rounding equals Java's
+    shortest-repr HALF_UP for every one-dimensional input: exact
+    scale-6 midpoints of either sign, values within an ulp of the
+    fallback band's edge, -0.0, and empty batches or partitions."""
+    import pandas as pd
+
+    from osm_airflow_spark.llm.similarity import _gram_micro_partials
+
+    frames = list(
+        _gram_micro_partials(
+            pd.DataFrame({"embedding": [[x] for x in b]}) for b in batches
+        )
+    )
+    xs = [x for b in batches for x in b]
+    if not xs:
+        assert frames == []  # an empty partition yields no partial
+        return
+    (out,) = frames
+    got = {(r.i, r.j): (r.s, r.n) for r in out.itertuples()}
+    assert got == {
+        (1, 0): (sum(_micros_ref(x) for x in xs), len(xs)),
+        (1, 1): (sum(_micros_ref(x * x) for x in xs), len(xs)),
+    }

@@ -26,11 +26,6 @@ def main() -> None:
     spark = get_spark("bench-warm")
     queries = all_queries()
     rows = []
-    # cold + rebuilt-warm run with the plan cache BYPASSED, so the
-    # "warm" column keeps its r5-r9 meaning (rebuilt plan, warm JVM);
-    # the third column is the r10 registry plan cache: same DataFrame
-    # object, re-analysis skipped.
-    os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
     for key in HEADLINE:
         q = queries[key]
         t0 = time.time()
@@ -41,43 +36,24 @@ def main() -> None:
         warm = time.time() - t1
         rows.append([key, cold, warm])
         spark.sparkContext._jvm.System.gc()
-    del os.environ["SPARK_GRAFT_NO_PLAN_CACHE"]
-    from osm_airflow_spark.registry import clear_plan_cache
-
-    clear_plan_cache()
-    for row in rows:
-        q = queries[row[0]]
-        q(spark, sf_dir).count()  # populate the cache
-        t2 = time.time()
-        q(spark, sf_dir).count()  # cached-plan steady state
-        row.append(time.time() - t2)
-        spark.sparkContext._jvm.System.gc()
     total_cold = sum(r[1] for r in rows)
     total_warm = sum(r[2] for r in rows)
-    total_cached = sum(r[3] for r in rows)
     out = [
         "# BENCH_WARM — steady-state headline timings",
         "",
         f"Generated by tools/bench_warm.py at {sf_dir} (local[32]).",
         "First-run includes codegen + plan compilation; warm is the",
-        "second run in the same JVM with a REBUILT plan (the r5-r9",
-        "definition, plan cache bypassed); cached-plan is the r10",
-        "registry plan cache — the same DataFrame object re-executed,",
-        "re-analysis skipped. bench.py's one-shot methodology remains",
-        "the driver-comparable record; this file contextualizes it.",
+        "second run in the same JVM with a rebuilt plan. bench.py's",
+        "one-shot methodology remains the round-comparable record;",
+        "this file contextualizes it.",
         "",
-        "| query | first run (s) | warm (s) | cached plan (s) | compile share |",
-        "| --- | --- | --- | --- | --- |",
+        "| query | first run (s) | warm (s) | compile share |",
+        "| --- | --- | --- | --- |",
     ]
-    for key, cold, warm, cached in rows:
+    for key, cold, warm in rows:
         share = 0.0 if cold == 0 else max(0.0, (cold - warm) / cold)
-        out.append(
-            f"| {key} | {cold:.3f} | {warm:.3f} | {cached:.3f} | {share:.0%} |"
-        )
-    out.append(
-        f"| **total** | **{total_cold:.3f}** | **{total_warm:.3f}** | "
-        f"**{total_cached:.3f}** | |"
-    )
+        out.append(f"| {key} | {cold:.3f} | {warm:.3f} | {share:.0%} |")
+    out.append(f"| **total** | **{total_cold:.3f}** | **{total_warm:.3f}** | |")
     out.append("")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "BENCH_WARM.md"), "w") as fh:

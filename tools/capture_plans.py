@@ -26,7 +26,6 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-    os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
     spark = get_spark("capture-plans")
     queries = all_queries()
     for key in keys:

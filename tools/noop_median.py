@@ -20,8 +20,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
-
 from osm_airflow_spark.registry import all_queries  # noqa: E402
 from osm_airflow_spark.session import get_spark  # noqa: E402
 

@@ -27,7 +27,6 @@ def main() -> None:
     args = sys.argv[1:]
     out_path = args[0] if args else "/tmp/profile_keys.json"
     sf_dir = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
-    os.environ["SPARK_GRAFT_NO_PLAN_CACHE"] = "1"
     spark = get_spark("profile-keys")
     queries = all_queries()
     keys = args[1:] or sorted(queries)
