@@ -37,6 +37,18 @@ DEFAULT_SHUFFLE_PARTITIONS = int(
     )
 )
 
+# Entries in the JVM's generated-class cache (a static conf, so only the
+# session builder can set it). Spark's default of 100 is smaller than
+# one pass over bench.py's 17 headline keys (about 220 classes): the LRU
+# evicts each class before its key runs again, and every warm pass pays
+# the Janino compile and a cold JIT a second time. Measured working
+# set: one tools/check.py pass over all 382 keys at sf0.01 compiles 4709
+# distinct classes (CodegenMetrics compile count, cap 1e6). The cap
+# leaves room above that. Holding them did not raise the JVM's peak RSS
+# for that pass (4-vCPU box, local[4], 4 GB heap): 4.6 GiB at the
+# default cap, which compiled 6988 classes, and 3.1 GiB uncapped.
+CODEGEN_CACHE_MAX_ENTRIES = 8192
+
 
 def get_spark(
     app_name: str = "osm_airflow_spark",
@@ -55,6 +67,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -72,7 +85,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     The driver harness hands us its own SparkSession; oracle
     comparability requires UTC timestamps (DuckDB timestamps are
     UTC-naive) and we want AQE behavior regardless of who built the
-    session. Only runtime-settable confs belong here.
+    session. Only runtime-settable confs belong here. Static confs
+    cannot follow: a session built elsewhere (the ``__spark_entry__``
+    path) keeps Spark's generated-class cache of 100 entries, not
+    ``CODEGEN_CACHE_MAX_ENTRIES``, so its warm passes recompile.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -84,3 +100,14 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     except Exception:
         pass
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (cache misses).
+
+    Reads the count of Spark's ``CodegenMetrics`` compile-time
+    histogram; a delta of 0 across an action means every class it ran
+    came from the generated-class cache.
+    """
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -8,6 +8,15 @@ the MEDIAN (middle value) is the comparison number — sf0.01 single
 shots vary ±2x on unchanged code (r14 finding), warm medians are
 stable to ~10%.
 
+The passes run back to back on one key, so passes 2-3 reuse the
+classes pass 1 compiled whenever that one key's classes fit the
+generated-class cache. They fit Spark's default of 100 entries for
+most keys, but not for the few that need close to 100: at the default,
+graph_closeness (84 classes at sf0.001) recompiled 22 on its second
+pass. This harness never showed the cross-key recompiles that a mixed
+pass over many keys pays when the cache is smaller than their working
+set (session.CODEGEN_CACHE_MAX_ENTRIES).
+
 Usage: SF_DIR=/root/testdata/sf0.1 python tools/noop_median.py key [key ...]
 """
 

@@ -55,13 +55,14 @@ HOT_FRACTION_MOD = 5  # xxhash64(pk) % 5 == 0 → ~20% of rows go hot
 def build_session(event_dir: str):
     from pyspark.sql import SparkSession
 
-    from osm_airflow_spark.session import configure_runtime
+    from osm_airflow_spark.session import CODEGEN_CACHE_MAX_ENTRIES, configure_runtime
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("skew-bench")
         .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
         .config("spark.driver.memory", "16g")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
