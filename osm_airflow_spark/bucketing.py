@@ -13,50 +13,39 @@ cuts — bucket placement can shift with partitioning, but the running
 totals are offset-corrected exactly, so results are bit-stable under
 any partitioning (pinned by test_partition_count_independence).
 
-This module centralizes the five formerly copy-pasted
-implementations (r9 self-review finding): one fix — e.g. the
-documented decimal(38,0) upgrade for >2·10⁹-row sums — now lands in
-one place. The zipf/gini originals predate it and stay untouched
-(driver-proven keys are not churned for style).
+Every global rank, prefix sum, prefix max and NTILE in the engine
+goes through this module: a rank is the running sum of a literal-1
+column (its row count is the ``totals`` by-product), an NTILE is
+arithmetic on that rank (``operators.windows.distributed_ntile``),
+and a decimal prefix runs over scaled integers. One fix — e.g. the
+documented decimal(38,0) upgrade for >2·10⁹-row sums — lands in one
+place; tests/test_registry.py lints that ``percentile_approx``
+appears nowhere else.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+N_BUCKETS = 8
 
-def bucketed_running(
-    df: DataFrame,
-    order_col: str,
-    sum_cols: list[str],
-    n_buckets: int = 8,
-) -> tuple[DataFrame, dict[str, int]]:
-    """Exact INCLUSIVE running sums of ``sum_cols`` (integer-typed)
-    over ``df`` ordered by ``order_col``, without a global window.
 
-    Returns ``(out, totals)`` where ``out`` is ``df`` plus a
-    ``run_<col>`` column per requested sum (global inclusive running
-    total in ``order_col`` order) and an ``_bkt`` int column (the
-    value-contiguous bucket id — callers chaining a SECOND running
-    pass over derived columns reuse it), and ``totals`` maps each
-    sum col to its exact grand total (a by-product of the offset
-    collect — no extra pass).
+def _bucketed(df: DataFrame, order_col: str) -> tuple[DataFrame, bool]:
+    """``df`` plus an int ``_bkt`` column: the value-contiguous bucket
+    id (0..N_BUCKETS-1) from approx-percentile cuts on ``order_col``.
+    The flag is False for an EMPTY frame — percentile_approx returns
+    NULL cuts there (a single-value frame returns real, equal cuts),
+    and every bucket id is 0.
 
-    ``df`` must have DISTINCT ``order_col`` values (group first);
-    sums must be integer-typed so offset arithmetic is exact — for
-    decimal running sums scale to integer micros first (the
-    pipeline_survival_km recipe). Cost: one ≤B-row collect plus one
-    B-way parallel window pass; input is expected to be bounded
-    (distinct values of a value space, never a raw corpus).
-
-    r14 (guide §1.2): the input executes THREE times here (the cuts
-    agg, the per-bucket offset collect, the output pass) and this
-    build never reuses exchange subtrees — so the input is
-    localCheckpoint-ed once at the head unless the caller already
-    passed a materialized checkpoint (LogicalRDD). Callers no longer
-    need their own pre-checkpoint, and the ones without one stop
-    re-running their whole upstream twice.
+    r14 (guide §1.2): the input executes THREE times in either caller
+    (the cuts agg, the per-bucket offset collect, the output pass) and
+    this build never reuses exchange subtrees — so the input is
+    localCheckpoint-ed once here unless the caller already passed a
+    materialized checkpoint (LogicalRDD). Callers need no
+    pre-checkpoint of their own.
 
     Cluster-scale caveat (VERDICT r14 #8, applies to EVERY
     localCheckpoint in this engine): localCheckpoint is
@@ -71,66 +60,96 @@ def bucketed_running(
         != "LogicalRDD"
     ):
         df = df.localCheckpoint(eager=True)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
+    probs = [i / N_BUCKETS for i in range(1, N_BUCKETS)]
     cuts = df.agg(
         F.percentile_approx(order_col, probs, 10_000).alias("c")
     ).head()[0]
-    if cuts is None:
-        # percentile_approx over an EMPTY frame returns NULL: emit the
-        # degenerate-but-well-typed result (zero rows -> zero-offset
-        # run columns, zero totals) instead of iterating None. A
-        # single-value frame returns real (equal) cuts, so only the
-        # truly-empty case lands here. run_<col> is typed from the
-        # SUM-result type (analysis only, nothing executes) so the
-        # degenerate schema matches the non-empty path even for a
-        # non-long sum column (ADVICE r10).
+    bucket: Column = F.lit(0)
+    for cut in cuts or []:
+        bucket = bucket + F.when(F.col(order_col) > F.lit(cut), 1).otherwise(0)
+    return df.withColumn("_bkt", bucket.cast("int")), cuts is not None
+
+
+def _by_bucket(values: dict, base: Column) -> Column:
+    """CASE chain: the literal ``values[_bkt]``, else ``base``."""
+    expr = base
+    for bkt, v in values.items():
+        expr = F.when(F.col("_bkt") == bkt, F.lit(v)).otherwise(expr)
+    return expr
+
+
+def bucketed_running(
+    df: DataFrame,
+    order_col: str,
+    sum_cols: list[str],
+    tie_cols: Sequence[str] = (),
+) -> tuple[DataFrame, dict[str, int]]:
+    """Exact INCLUSIVE running sums of ``sum_cols`` (integer-typed)
+    over ``df`` ordered by ``(order_col, *tie_cols)``, without a
+    global window.
+
+    Returns ``(out, totals)`` where ``out`` is ``df`` plus a
+    ``run_<col>`` column per requested sum (global inclusive running
+    total in that order) and an ``_bkt`` int column (the
+    value-contiguous bucket id — callers chaining a SECOND running
+    pass over derived columns reuse it), and ``totals`` maps each
+    sum col to its exact grand total (a by-product of the offset
+    collect — no extra pass).
+
+    Cuts are placed on ``order_col`` alone, so rows tied on it share
+    a bucket and ``tie_cols`` only order rows inside one bucket's
+    window. The FULL order ``(order_col, *tie_cols)`` must be
+    DISTINCT (group first, or tie-break on a key). A global 1-based
+    rank is the running sum of a literal-1 column; its total is the
+    row count. Sums must be integer-typed so offset arithmetic is
+    exact — for decimal running sums scale to integer micros first
+    (the pipeline_survival_km / pipeline_pareto_abc recipe). Cost:
+    the guarded head checkpoint, one ≤B-row collect and one B-way
+    parallel window pass; input is expected to be bounded (distinct
+    values of a value space, never a raw corpus)."""
+    bucketed, nonempty = _bucketed(df, order_col)
+    if not nonempty:
+        # zero rows -> zero-offset run columns, zero totals. run_<col>
+        # is typed from the SUM-result type (analysis only, nothing
+        # executes) so the degenerate schema matches the non-empty
+        # path even for a non-long sum column (ADVICE r10).
         sum_schema = df.select(
             *[F.sum(c).alias(c) for c in sum_cols]
         ).schema
-        out = df.select(
+        out = bucketed.select(
             "*",
-            F.lit(0).cast("int").alias("_bkt"),
             *[
                 F.lit(0).cast(f.dataType).alias(f"run_{f.name}")
                 for f in sum_schema.fields
             ],
         )
         return out, {c: 0 for c in sum_cols}
-    bucket: Column = F.lit(0)
-    for cut in cuts:
-        bucket = bucket + F.when(F.col(order_col) > F.lit(cut), 1).otherwise(0)
-    bucketed = df.withColumn("_bkt", bucket.cast("int"))
     per_bucket = {
         r["_bkt"]: tuple(r[f"_s_{c}"] for c in sum_cols)
         for r in bucketed.groupBy("_bkt")
         .agg(*[F.sum(c).alias(f"_s_{c}") for c in sum_cols])
         .collect()
     }
-    offsets: list[Column] = [F.lit(0).cast("long") for _ in sum_cols]
+    offsets: list[dict] = [{} for _ in sum_cols]
     running = [0 for _ in sum_cols]
-    for bkt in range(n_buckets):
-        if bkt not in per_bucket:
-            continue
+    for bkt in sorted(per_bucket):
         for i in range(len(sum_cols)):
             if running[i] != 0:
-                offsets[i] = F.when(
-                    F.col("_bkt") == bkt, F.lit(running[i])
-                ).otherwise(offsets[i])
+                offsets[i][bkt] = running[i]
             running[i] += per_bucket[bkt][i] or 0
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy("_bkt")
-        .orderBy(order_col)
+        .orderBy(order_col, *tie_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     out = bucketed.select(
         "*",
         *[
-            (offsets[i] + F.sum(sum_cols[i]).over(w)).alias(
-                f"run_{sum_cols[i]}"
-            )
-            for i in range(len(sum_cols))
+            (
+                _by_bucket(offsets[i], F.lit(0).cast("long"))
+                + F.sum(c).over(w)
+            ).alias(f"run_{c}")
+            for i, c in enumerate(sum_cols)
         ],
     )
     return out, {c: running[i] for i, c in enumerate(sum_cols)}
@@ -140,7 +159,6 @@ def bucketed_running_max(
     df: DataFrame,
     order_col: str,
     val_col: str,
-    n_buckets: int = 8,
 ) -> DataFrame:
     """Exact EXCLUSIVE-prefix running MAX of integer ``val_col`` over
     ``df`` ordered by ``order_col``, without a global window — the
@@ -148,56 +166,28 @@ def bucketed_running_max(
     ``run_max_<val_col>`` = MAX(val) over all rows STRICTLY before it
     in ``order_col`` order (NULL for the global first row).
 
-    Same discipline as ``bucketed_running``: value-contiguous buckets
-    from approx-percentile cuts (equal order values share a bucket),
+    Same buckets and guarded head checkpoint as ``bucketed_running``,
     per-bucket parallel windows with an EXCLUSIVE frame, and ≤B
     collected per-bucket maxima lifted to cross-bucket offsets —
     max is reorder-safe, so the offset lift is exact under any
-    partitioning. ``order_col`` values must be DISTINCT.
-
-    r14: same guarded head checkpoint as ``bucketed_running`` — the
-    input feeds the cuts agg, the offset collect AND the output pass.
-    Same cluster-scale caveat: swap localCheckpoint for a reliable
-    checkpoint dir on real clusters."""
-    if (
-        df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-        != "LogicalRDD"
-    ):
-        df = df.localCheckpoint(eager=True)
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = df.agg(
-        F.percentile_approx(order_col, probs, 10_000).alias("c")
-    ).head()[0]
-    if cuts is None:
-        return df.select(
-            "*",
-            F.lit(0).cast("int").alias("_bkt"),
-            F.lit(None).cast(
-                df.schema[val_col].dataType
-            ).alias(f"run_max_{val_col}"),
-        )
-    bucket: Column = F.lit(0)
-    for cut in cuts:
-        bucket = bucket + F.when(F.col(order_col) > F.lit(cut), 1).otherwise(0)
-    bucketed = df.withColumn("_bkt", bucket.cast("int"))
+    partitioning. ``order_col`` values must be DISTINCT."""
+    bucketed, nonempty = _bucketed(df, order_col)
+    null = F.lit(None).cast(df.schema[val_col].dataType)
+    if not nonempty:
+        return bucketed.select("*", null.alias(f"run_max_{val_col}"))
     per_bucket = {
         r["_bkt"]: r["_m"]
         for r in bucketed.groupBy("_bkt")
         .agg(F.max(val_col).alias("_m"))
         .collect()
     }
-    offset: Column = F.lit(None).cast(df.schema[val_col].dataType)
-    running = None
-    for bkt in range(n_buckets):
+    offsets, running = {}, None
+    for bkt in sorted(per_bucket):
         if running is not None:
-            offset = F.when(F.col("_bkt") == bkt, F.lit(running)).otherwise(
-                offset
-            )
-        if bkt in per_bucket and per_bucket[bkt] is not None:
-            m = per_bucket[bkt]
+            offsets[bkt] = running
+        m = per_bucket[bkt]
+        if m is not None:
             running = m if running is None else max(running, m)
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy("_bkt")
         .orderBy(order_col)
@@ -205,7 +195,7 @@ def bucketed_running_max(
     )
     return bucketed.select(
         "*",
-        F.greatest(F.max(val_col).over(w), offset).alias(
+        F.greatest(F.max(val_col).over(w), _by_bucket(offsets, null)).alias(
             f"run_max_{val_col}"
         ),
     )

@@ -3465,55 +3465,29 @@ def llm_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ledger rule).
 
     Scale: word counts are one vocabulary-bounded groupBy with
-    map-side partials; the GLOBAL rank — the shape that tempts an
-    unpartitioned window (the lint's hard GLOBW rule) — reuses the
-    pipeline_gini/pareto bucket-offset pattern: value-contiguous
-    buckets from approx-percentile cuts on freq, per-bucket
-    row_number (B-way parallel windows; equal frequencies always
-    share a bucket, so bucket boundaries respect the total order),
-    exact per-bucket count offsets collected as ≤B control-plane
-    rows. The descending rank falls out as n_total − r_asc + 1 with
-    n_total from the same control-plane counts — no extra pass, no
-    global window, and the final fit is a 1-row aggregate."""
-    from pyspark.sql import Window
+    map-side partials; the GLOBAL rank in (freq DESC, word) order —
+    the shape that tempts an unpartitioned window (the lint's hard
+    GLOBW rule) — comes from ``bucketing.bucketed_running``, and the
+    final fit is a 1-row aggregate."""
+    from osm_airflow_spark.bucketing import bucketed_running
 
     d = load_table(spark, sf_dir, "documents")
     counts = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .localCheckpoint(eager=True)  # feeds cuts + counts + ranking
+        .select(
+            "word",
+            "freq",
+            (-F.col("freq")).alias("neg_freq"),
+            F.lit(1).alias("_one"),
+        )
     )
-    n_buckets = 8
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = counts.agg(
-        F.percentile_approx("freq", probs, 10_000).alias("c")
-    ).head()[0]
-    bucket = F.lit(0)
-    for cut in cuts:
-        bucket = bucket + F.when(F.col("freq") > F.lit(cut), 1).otherwise(0)
-    bucketed = counts.withColumn("_bkt", bucket.cast("int"))
-    per_bucket = {
-        r["_bkt"]: r["n"]
-        for r in bucketed.groupBy("_bkt").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_total = sum(per_bucket.values())
-    offset_expr, running = F.lit(0), 0
-    for b in range(n_buckets):
-        if running and per_bucket.get(b) is not None:
-            offset_expr = F.when(F.col("_bkt") == b, F.lit(running)).otherwise(
-                offset_expr
-            )
-        running += per_bucket.get(b, 0)
-    # ascending local windows; the oracle's DESC rank = n - r_asc + 1
-    w_local = Window.partitionBy("_bkt").orderBy(
-        F.col("freq").asc(), F.col("word").desc()
-    )
-    r_asc = (offset_expr + F.row_number().over(w_local)).cast("long")
-    rank = F.lit(int(n_total)) - r_asc + F.lit(1)
+    ranked, _ = bucketed_running(counts, "neg_freq", ["_one"], ["word"])
+    rank = F.col("run__one")
     x = F.round(F.log(rank.cast("double")), 6).cast("decimal(18,6)")
     y = F.round(F.log(F.col("freq").cast("double")), 6).cast("decimal(18,6)")
-    pts = bucketed.select(x.alias("x"), y.alias("y"))
+    pts = ranked.select(x.alias("x"), y.alias("y"))
     fit = pts.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("x").cast("double").alias("sx"),

@@ -32,6 +32,12 @@ from pyspark.sql import functions as F
 from osm_airflow_spark.io import load_table
 from osm_airflow_spark.registry import query
 
+# Row cap under which BFS frontiers/labels broadcast into the per-round
+# joins; past it a round falls back to the shuffle join. Sized so the
+# built hash relation of (sid, node, hops) longs stays tens of MB —
+# raise or lower it with executor memory on a real cluster.
+BFS_BROADCAST_ROWS = 2_000_000
+
 _EDGE_SQL = """
       SELECT ns.n_name AS a, nc.n_name AS b
       FROM lineitem l
@@ -231,9 +237,10 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup stack builds clusters with, here as a standalone SQL-ORACLED
     key — DuckDB proves it with a recursive-CTE reachability closure,
     Spark with the large-star/small-star contraction from
-    ``llm/dedup.py`` (O(log n) rounds; label propagation would need
-    diameter rounds, and this graph's sparse sf0.01 giant component
-    makes that the difference between 11 rounds and hundreds).
+    ``llm/dedup.py``. Label propagation (``cluster_pairs``) also
+    converges in O(log diameter) rounds — it uses pointer doubling —
+    but on this sparse graph it measured 29–37% slower warm (sf0.01,
+    sf0.1), so this key keeps the star kernel.
 
     Scale: the pair derivation is keyed on l_orderkey so the
     quadratic term is per-basket; support >= 2 prunes the long tail
@@ -334,18 +341,17 @@ def bfs_hops(und: DataFrame, seed: DataFrame, max_rounds: int = 8) -> DataFrame:
     is small (typical for early and late hops — and always, on
     fixture graphs), it BROADCASTS into the expansion join and the
     anti-join, so the big edge table is never exchanged per round;
-    past ``SPARK_GRAFT_BFS_BROADCAST_ROWS`` (default 2e6 rows ≈ tens
-    of MB of (sid,node,hops) longs) the round falls back to the
-    shuffle join. The emptiness probe is the checkpoint-scan count()
-    that feeds the decision — still one job per round. Cluster-scale caveat: the per-round localCheckpoint is executor-local — swap in a reliable checkpoint dir on real clusters (see bucketing.py).
+    past ``BFS_BROADCAST_ROWS`` (2e6 rows ≈ tens of MB of
+    (sid,node,hops) longs) the round falls back to the shuffle join.
+    The emptiness probe is the checkpoint-scan count() that feeds the
+    decision — still one job per round. Cluster-scale caveat: the per-round localCheckpoint is executor-local — swap in a reliable checkpoint dir on real clusters (see bucketing.py).
     """
     frontiers, frontier = [seed], seed
     counts = [seed.count()]
-    cap = _bfs_broadcast_rows()
     for depth in range(1, max_rounds + 1):
         labels = reduce(DataFrame.union, frontiers)
-        f = F.broadcast(frontier) if counts[-1] <= cap else frontier
-        lab = F.broadcast(labels) if sum(counts) <= cap else labels
+        f = F.broadcast(frontier) if counts[-1] <= BFS_BROADCAST_ROWS else frontier
+        lab = F.broadcast(labels) if sum(counts) <= BFS_BROADCAST_ROWS else labels
         nxt = (
             f.join(und, f["node"] == und["a"])
             .select(F.col("b").alias("node"))
@@ -361,17 +367,6 @@ def bfs_hops(und: DataFrame, seed: DataFrame, max_rounds: int = 8) -> DataFrame:
         counts.append(c)
         frontier = nxt
     return reduce(DataFrame.union, frontiers)
-
-
-def _bfs_broadcast_rows() -> int:
-    """Row cap under which BFS frontiers/labels broadcast (env
-    ``SPARK_GRAFT_BFS_BROADCAST_ROWS``, default 2e6 — scale-adaptive
-    via config, never a local-core constant). Cluster note: sized so
-    the built hash relation stays tens of MB; raise/lower with
-    executor memory."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_BFS_BROADCAST_ROWS", "2000000"))
 
 
 @query("graph_kcore")  # rows-only: iterative peeling fixpoint, no SQL twin
@@ -777,17 +772,16 @@ def bfs_hops_multi(und: DataFrame, seeds: DataFrame, max_rounds: int = 8) -> Dat
     growing label set is no longer re-checkpointed every round.
 
     r15 (guide §3.1, VERDICT r14 #7): frontier/labels broadcast into
-    the per-round joins while under the row cap (see bfs_hops) — the
+    the per-round joins while under ``BFS_BROADCAST_ROWS`` — the
     edge table stops being exchanged every round; shuffle-join
     fallback past the cap. Cluster-scale caveat: the per-round localCheckpoint is executor-local — swap in a reliable checkpoint dir on real clusters (see bucketing.py).
     """
     frontiers, frontier = [seeds], seeds
     counts = [seeds.count()]
-    cap = _bfs_broadcast_rows()
     for depth in range(1, max_rounds + 1):
         labels = reduce(DataFrame.union, frontiers)
-        f = F.broadcast(frontier) if counts[-1] <= cap else frontier
-        lab = F.broadcast(labels) if sum(counts) <= cap else labels
+        f = F.broadcast(frontier) if counts[-1] <= BFS_BROADCAST_ROWS else frontier
+        lab = F.broadcast(labels) if sum(counts) <= BFS_BROADCAST_ROWS else labels
         nxt = (
             f.join(und, f["node"] == und["a"])
             .select("sid", F.col("b").alias("node"))

@@ -16,9 +16,10 @@ G1's explicit global sort, which range-partitions instead).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from osm_airflow_spark.bucketing import bucketed_running
 from osm_airflow_spark.io import load_table
 from osm_airflow_spark.registry import query
 
@@ -172,58 +173,36 @@ def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ntile(rank: Column, n_total: int, k: int) -> Column:
+    """NTILE(k) of an exact 1-based global rank over ``n_total`` rows:
+    the first n%k tiles get ceil(n/k) rows, the rest floor(n/k)."""
+    q, r = divmod(n_total, k)
+    big = r * (q + 1)  # rows covered by the size-(q+1) tiles
+    return (
+        F.when(F.lit(r > 0) & (rank <= F.lit(big)), F.ceil(rank / F.lit(q + 1)))
+        .otherwise(F.lit(r) + F.ceil((rank - F.lit(big)) / F.lit(max(q, 1))))
+        .cast("long")
+    )
+
+
 def distributed_ntile(
     df: DataFrame,
     metric_col: Column,
     id_col: str,
     out_col: str,
     k: int,
-    n_buckets: int = 8,
 ) -> DataFrame:
     """Exact NTILE(k) over (metric asc, id asc) with NO unpartitioned
-    window — the win_ntile pattern as a reusable helper (callers
-    wanting DESC pass a negated metric). approx-percentile cut points
-    make range-contiguous buckets; rank = per-bucket row_number +
-    collected bucket offsets (control-plane, B tiny rows); the tile
-    is pure arithmetic on the exact rank. Matches global-window NTILE
-    bit-for-bit because buckets are range-contiguous and (metric, id)
-    is a total order.
-
-    r14 (guide §1.2): the working frame feeds the cuts agg, the
-    bucket-count collect AND the output pass — three executions of
-    the caller's upstream under no-exchange-reuse — so it is
-    localCheckpoint-ed once at the head (the bucketed_running fix)."""
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    work = df.withColumn("_m", metric_col.cast("double")).localCheckpoint(
-        eager=True
+    window (callers wanting DESC pass a negated metric): the global
+    rank is ``bucketing.bucketed_running``'s running count, the tile
+    is pure arithmetic on it."""
+    work = df.select(
+        "*", metric_col.cast("double").alias("_m"), F.lit(1).alias("_one")
     )
-    cuts = work.agg(
-        F.percentile_approx("_m", probs, 10_000).alias("cuts")
-    ).head()[0]
-    bucket = F.lit(0)
-    for cut in cuts:
-        bucket = bucket + F.when(F.col("_m") > F.lit(cut), 1).otherwise(0)
-    bucketed = work.withColumn("_bkt", bucket.cast("int"))
-    counts = {
-        r["_bkt"]: r["n"]
-        for r in bucketed.groupBy("_bkt").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_total = sum(counts.values())
-    offset_expr, running = F.lit(0), 0
-    for b in range(n_buckets):
-        if running and counts.get(b):
-            offset_expr = F.when(F.col("_bkt") == b, F.lit(running)).otherwise(
-                offset_expr
-            )
-        running += counts.get(b, 0)
-    w_local = Window.partitionBy("_bkt").orderBy("_m", id_col)
-    rank = (offset_expr + F.row_number().over(w_local)).cast("long")
-    q, r = divmod(n_total, k)
-    big = r * (q + 1)
-    tile = F.when(
-        F.lit(r > 0) & (rank <= F.lit(big)), F.ceil(rank / F.lit(q + 1))
-    ).otherwise(F.lit(r) + F.ceil((rank - F.lit(big)) / F.lit(max(q, 1))))
-    return bucketed.withColumn(out_col, tile.cast("long")).drop("_m", "_bkt")
+    ranked, totals = bucketed_running(work, "_m", ["_one"], [id_col])
+    return ranked.withColumn(
+        out_col, _ntile(F.col("run__one"), totals["_one"], k)
+    ).drop("_m", "_one", "_bkt", "run__one")
 
 
 @query(
@@ -237,68 +216,22 @@ def distributed_ntile(
 )
 def win_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F6 — distribution buckets via DISTRIBUTED exact rank (no
-    unpartitioned window anywhere in the plan):
-
-    1. approx_percentile cut points (one aggregation) → B range-
-       contiguous, content-derived buckets of ``c_acctbal``;
-    2. per-bucket local ``row_number`` (window partitioned by bucket
-       → B-way parallel, never single-task);
-    3. per-bucket row counts (B tiny rows, collected — control
-       plane, like cluster metadata) → cumulative offsets;
-    4. global_rank = offset[bucket] + local_rank, exact because the
-       buckets are range-contiguous and the ordering key
-       (c_acctbal, c_custkey) is unique.
-
-    NTILE/percent_rank are then pure column math on the exact rank —
-    matching the oracle's global-window semantics bit for bit while
-    every stage stays partition-parallel. Cut points are collected
-    once and embedded as literals, so bucket assignment is identical
-    across the counts job and the final job."""
-    c = load_table(spark, sf_dir, "customer")
-
-    n_buckets = 8
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = c.agg(
-        F.percentile_approx("c_acctbal", probs, 10_000).alias("cuts")
-    ).head()[0]
-    # Range-contiguous bucket id from literal cut points (0..B-1).
-    bucket = F.lit(0)
-    for cut in cuts:
-        bucket = bucket + F.when(F.col("c_acctbal") > F.lit(cut), 1).otherwise(0)
-    bucketed = c.select("c_custkey", "c_acctbal", bucket.cast("int").alias("bkt"))
-
-    counts = {
-        r["bkt"]: r["n"]
-        for r in bucketed.groupBy("bkt").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    n_total = sum(counts.values())
-    offsets, running = {}, 0
-    for b in range(n_buckets):
-        offsets[b] = running
-        running += counts.get(b, 0)
-    offset_expr = F.lit(0)
-    for b, off in offsets.items():
-        if off:
-            offset_expr = F.when(F.col("bkt") == b, F.lit(off)).otherwise(offset_expr)
-
-    w_local = Window.partitionBy("bkt").orderBy("c_acctbal", "c_custkey")
-    rank = (offset_expr + F.row_number().over(w_local)).cast("long")
-
-    # NTILE(k): first n%k buckets get ceil(n/k) rows, rest floor(n/k).
-    k = 4
-    q, r = divmod(n_total, k)
-    big = r * (q + 1)  # rows covered by the size-(q+1) tiles
-    ntile_expr = F.when(
-        F.lit(r > 0) & (rank <= F.lit(big)),
-        F.ceil(rank / F.lit(q + 1)),
-    ).otherwise(F.lit(r) + F.ceil((rank - F.lit(big)) / F.lit(max(q, 1))))
-
+    unpartitioned window anywhere in the plan): the global rank in
+    (c_acctbal, c_custkey) order comes from ``bucketing.py``, and
+    NTILE/percent_rank are pure column math on it — matching the
+    oracle's global-window semantics bit for bit while every stage
+    stays partition-parallel."""
+    c = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_acctbal", F.lit(1).alias("_one")
+    )
+    ranked, totals = bucketed_running(c, "c_acctbal", ["_one"], ["c_custkey"])
+    rank, n_total = F.col("run__one"), totals["_one"]
     # percent_rank of a single row is 0.0 by definition (avoid 0/0)
     pct_denom = max(n_total - 1, 1)
-    return bucketed.select(
+    return ranked.select(
         "c_custkey",
         "c_acctbal",
-        ntile_expr.cast("long").alias("bal_quartile"),
+        _ntile(rank, n_total, 4).alias("bal_quartile"),
         ((rank - F.lit(1)) / F.lit(pct_denom)).alias("bal_pct_rank"),
     )
 
@@ -1205,8 +1138,6 @@ def win_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix(rn) − prefix(rn−14) via two control-plane self-joins, and
     the DuckDB oracle keeps its plain window form — only values must
     match."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(18,2)")
     daily = o.groupBy(
@@ -1415,8 +1346,6 @@ def win_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly as win_atr; days are calendar-bounded so both extra
     passes are control-plane sized. The DuckDB oracle keeps its plain
     window form — only values must match."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("day")
@@ -1695,8 +1624,6 @@ def win_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join; the frame-day rank rides ``bucketed_running`` (no
     global window) and the two lags are broadcast control-plane
     self-joins on rank."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(18,2)")
     daily = (
@@ -1925,8 +1852,6 @@ def win_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale + lint: the lag-1 predecessor rides ``bucketed_running``'s
     day rank + a broadcast self-join (the OBV shape) — no global
     window; days-bounded control plane throughout."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(18,2)")
     daily = o.groupBy(
@@ -2138,8 +2063,6 @@ def win_mfi(spark: SparkSession, sf_dir: str) -> DataFrame:
     window); the prior-day direction and the 14-period frame are
     TWO broadcast rank-range self-joins over the days-bounded
     control plane (the stochastic/CCI shape)."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("decimal(18,2)")
     daily = o.groupBy(
@@ -2302,8 +2225,6 @@ def win_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     window); ONE bounded rank-range self-join serves BOTH EMAs via
     conditional kernels (the ichimoku multi-horizon trick) and a
     second ONE serves the signal — all broadcast, days-bounded."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("day")

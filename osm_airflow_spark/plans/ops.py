@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osm_airflow_spark.bucketing import bucketed_running, bucketed_running_max
 from osm_airflow_spark.io import load_table
 from osm_airflow_spark.registry import dsum, query, sql_dsum
 
@@ -47,61 +48,31 @@ def pipeline_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative revenue share, classes at 80% / 95% — the 80/20
     analysis every inventory and spend dashboard runs, and the shape
     that tempts a GLOBAL cumulative window (the canonical 100x scale
-    killer). This plan refuses it: the win_ntile bucket-offset
-    pattern generalizes from ranks to PREFIX SUMS —
-
-    1. revenue per part (one keyed aggregation, decimal-exact);
-    2. approx-percentile cuts -> B range-contiguous buckets of
-       (-revenue), so bucket order == global (revenue DESC) order;
-    3. per-bucket DECIMAL revenue totals (B tiny rows, collected —
-       control plane) -> exact cumulative offsets per bucket,
-       Python-summed as Decimal so nothing rounds;
-    4. per-bucket decimal running sum (window partitioned by bucket —
-       B-way parallel) + the bucket's offset = the exact global
-       prefix; one double division against the exact total.
-
-    Every prefix is a decimal sum in some order of the same values —
-    order-independent, so the distributed prefix equals the oracle's
-    global-window prefix bit-for-bit."""
+    killer). The prefix is ``bucketing.bucketed_running`` over
+    (-revenue, l_partkey) on revenue in integer 1e-4 units (exact:
+    revenue is a 4-dp value by construction), read back as the same
+    decimal(·,4) prefix the oracle sums, then one double division
+    against the exact total."""
     from decimal import Decimal
 
-    from pyspark.sql import Window
+    def e4_to_double(c):
+        return (c.cast("decimal(20,0)") * F.lit(Decimal("0.0001"))).cast("double")
 
     li = load_table(spark, sf_dir, "lineitem")
-    part_rev = (
-        li.groupBy("l_partkey")
-        .agg(dsum(_rev(), 4).alias("revenue"))
-        .localCheckpoint(eager=True)  # feeds cuts + totals + ranking
+    part_rev = li.groupBy("l_partkey").agg(dsum(_rev(), 4).alias("revenue"))
+    work = part_rev.select(
+        "l_partkey",
+        "revenue",
+        (-F.col("revenue")).alias("_m"),
+        (F.col("revenue").cast("decimal(18,4)") * 10_000)
+        .cast("long")
+        .alias("rev_e4"),
     )
-    n_buckets = 8
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    work = part_rev.withColumn("_m", -F.col("revenue"))
-    cuts = work.agg(F.percentile_approx("_m", probs, 10_000).alias("c")).head()[0]
-    bucket = F.lit(0)
-    for cut in cuts:
-        bucket = bucket + F.when(F.col("_m") > F.lit(cut), 1).otherwise(0)
-    bucketed = work.withColumn("_bkt", bucket.cast("int"))
-    # control plane: per-bucket exact decimal totals -> offsets
-    totals = {
-        r["_bkt"]: r["t"]
-        for r in bucketed.groupBy("_bkt")
-        .agg(F.sum(F.col("revenue").cast("decimal(18,4)")).alias("t"))
-        .collect()
-    }
-    grand = sum(totals.values(), Decimal(0))
-    offset_expr, running = F.lit(0).cast("decimal(28,4)"), Decimal(0)
-    for b in range(n_buckets):
-        if running and totals.get(b) is not None:
-            offset_expr = F.when(
-                F.col("_bkt") == b, F.lit(str(running)).cast("decimal(28,4)")
-            ).otherwise(offset_expr)
-        running += totals.get(b, Decimal(0))
-    w_local = Window.partitionBy("_bkt").orderBy("_m", "l_partkey")
-    prefix = offset_expr + F.sum(F.col("revenue").cast("decimal(18,4)")).over(w_local)
-    cum_share = prefix.cast("double") / F.lit(str(grand)).cast("decimal(28,4)").cast(
-        "double"
+    ranked, totals = bucketed_running(work, "_m", ["rev_e4"], ["l_partkey"])
+    cum_share = e4_to_double(F.col("run_rev_e4")) / e4_to_double(
+        F.lit(totals["rev_e4"])
     )
-    classed = bucketed.withColumn(
+    classed = ranked.withColumn(
         "abc_class",
         F.when(cum_share <= 0.8, "A").when(cum_share <= 0.95, "B").otherwise("C"),
     )
@@ -140,50 +111,24 @@ def pipeline_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality metric beside Pareto/ABC: G = 2·Σ(i·xᵢ)/(n·Σx) −
     (n+1)/n with x ascending. The rank i is GLOBAL — the shape that
     tempts an unpartitioned window (the lint's hard GLOBW rule) — so
-    this plan reuses the pareto bucket-offset pattern for RANKS:
-    value-contiguous buckets from approx-percentile cuts, per-bucket
-    row_number (B-way parallel windows), plus exact per-bucket count
-    offsets collected as B control-plane rows. Σ(i·x) is exact:
-    bigint rank × DECIMAL(18,4) revenue (an unambiguous double→
-    decimal cast — revenue IS a 4-dp value by construction) summed in
-    decimal; the final G is one shared IEEE expression over agreed
-    doubles, emitted UNROUNDED (the win_ewma ledger rule: never
-    round() an inexact double sum for the oracle)."""
+    it comes from ``bucketing.bucketed_running`` over (revenue,
+    o_custkey). Σ(i·x) is exact: bigint rank × DECIMAL(18,4) revenue
+    (an unambiguous double→decimal cast — revenue IS a 4-dp value by
+    construction) summed in decimal; the final G is one shared IEEE
+    expression over agreed doubles, emitted UNROUNDED (the win_ewma
+    ledger rule: never round() an inexact double sum for the
+    oracle)."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     cust_rev = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("o_custkey")
         .agg(dsum(_rev(), 4).alias("revenue"))
-        .localCheckpoint(eager=True)  # feeds cuts + counts + ranking
+        .withColumn("_one", F.lit(1))
     )
-    n_buckets = 8
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = cust_rev.agg(
-        F.percentile_approx("revenue", probs, 10_000).alias("c")
-    ).head()[0]
-    bucket = F.lit(0)
-    for cut in cuts:
-        bucket = bucket + F.when(F.col("revenue") > F.lit(cut), 1).otherwise(0)
-    bucketed = cust_rev.withColumn("_bkt", bucket.cast("int"))
-    # control plane: per-bucket row counts -> exact rank offsets
-    counts = {
-        r["_bkt"]: r["n"]
-        for r in bucketed.groupBy("_bkt").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offset_expr, running = F.lit(0), 0
-    for b in range(n_buckets):
-        if running and counts.get(b) is not None:
-            offset_expr = F.when(F.col("_bkt") == b, F.lit(running)).otherwise(
-                offset_expr
-            )
-        running += counts.get(b, 0)
-    from pyspark.sql import Window
-
-    w_local = Window.partitionBy("_bkt").orderBy("revenue", "o_custkey")
-    rank = (offset_expr + F.row_number().over(w_local)).cast("long")
+    ranked, _ = bucketed_running(cust_rev, "revenue", ["_one"], ["o_custkey"])
     rev_dec = F.col("revenue").cast("decimal(18,4)")
-    ranked = bucketed.select(rev_dec.alias("rd"), rank.alias("i"))
+    ranked = ranked.select(rev_dec.alias("rd"), F.col("run__one").alias("i"))
     agg = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("rd").alias("sx"),
@@ -380,8 +325,6 @@ def pipeline_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     a distinct-value running pass (bounded by distinct revenue
     values), one value-bounded join-back, one parts-bounded join.
     Nothing corpus-sized after the first shuffles."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     li = load_table(spark, sf_dir, "lineitem")
     rev = (
         li.groupBy(F.col("l_partkey").alias("pk"))
@@ -627,8 +570,6 @@ def pipeline_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     the distinct-value table, the bucket-offset cumulative (B-way
     parallel, no global window), then a broadcast 10-row boundary
     join — output is O(10)."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     cust_rev = (
@@ -756,8 +697,6 @@ def pipeline_newsvendor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus pass to (priority, day) counts (days ×
     priorities bounded), then distinct-value-bounded everywhere."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     np_ = len(_NV_PRIOS)
     daily = o.groupBy(
@@ -1070,8 +1009,6 @@ def pipeline_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two filtered corpus passes to per-part revenue (the date
     predicate pushes to the scan), two distinct-value cumulatives,
     one full-outer join on partkey; output ≤ 16 rows."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     li = load_table(spark, sf_dir, "lineitem")
     cut = F.lit("1998-01-01").cast("timestamp")
 
@@ -1258,8 +1195,6 @@ def pipeline_xmr_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     all unrounded.
 
     Scale: one groupBy(day) pass + days-bounded control plane."""
-    from osm_airflow_spark.bucketing import bucketed_running
-
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(
         F.date_trunc("day", F.col("o_orderdate")).cast("date").alias("day")
@@ -1670,8 +1605,6 @@ def pipeline_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     window); the composite key p_c * 2^33 - vol is injective while
     volumes stay under 2^33 (sf ~ 10^5) and keys stay under 2^63
     (cent prices < 2^29 — TPC-H prices are sf-independent)."""
-    from osm_airflow_spark.bucketing import bucketed_running_max
-
     li = load_table(spark, sf_dir, "lineitem")
     pp = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum(F.col("l_quantity").cast("long")).cast("long").alias("vol"),

@@ -1283,6 +1283,12 @@ def test_bucketed_running_empty_input(spark):
         == dec.select(F.sum("amt")).schema[0].dataType
     )
     assert totd == {"amt": 0}
+    # distributed_ntile ranks through bucketed_running, so it inherits
+    # the empty guard: an empty frame gets an empty, typed tile column
+    from osm_airflow_spark.operators.windows import distributed_ntile
+
+    tiles = distributed_ntile(empty, F.col("n"), "v", "q", 4)
+    assert tiles.count() == 0 and tiles.columns == ["v", "n", "q"]
 
 
 def test_kcore_peel_cap_raises_not_mislabels(spark):
@@ -1580,7 +1586,7 @@ def test_win_atr_hand_fixture(spark, tmp_path):
     assert [tuple(r) for r in got] == want
 
 
-def test_graph_closeness_matches_python_bfs_replica(spark, sf_dir):
+def test_graph_closeness_matches_python_bfs_replica(spark, sf_dir, monkeypatch):
     """Third implementation: pure-Python BFS from the same 4
     alphabetically-first seeds over the collected trade edge list
     must reproduce every (n_seeds_reached, h840, harmonic) exactly —
@@ -1591,6 +1597,7 @@ def test_graph_closeness_matches_python_bfs_replica(spark, sf_dir):
     themselves-as-seed."""
     from collections import deque
 
+    from osm_airflow_spark.operators import graph
     from osm_airflow_spark.operators.graph import (
         bfs_hops_multi,
         trade_edges,
@@ -1642,12 +1649,14 @@ def test_graph_closeness_matches_python_bfs_replica(spark, sf_dir):
         [(s, s, 0) for s in ("H", "r1", "r2", "r3")],
         "sid string, node string, hops int",
     )
-    d = {
-        (r["sid"], r["node"]): r["hops"]
-        for r in bfs_hops_multi(und, seed_df).collect()
-    }
+    rows = bfs_hops_multi(und, seed_df).collect()
+    d = {(r["sid"], r["node"]): r["hops"] for r in rows}
     assert d[("H", "r4")] == 1 and d[("r1", "r4")] == 2
     assert d[("r1", "r2")] == 2 and d[("r1", "H")] == 1
+    # a zero broadcast cap runs every round through the shuffle-join
+    # fallback; it must label the same rows
+    monkeypatch.setattr(graph, "BFS_BROADCAST_ROWS", 0)
+    assert sorted(bfs_hops_multi(und, seed_df).collect()) == sorted(rows)
 
 
 def test_agg_moments_closed_form_distributions(spark, tmp_path):

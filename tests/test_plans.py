@@ -208,6 +208,9 @@ def test_aqe_splits_skewed_join_partitions(spark, sf_dir):
         "llm_dedup_substring",        # r11: gram anchors -> islands window
         "pipeline_sprt",              # r11: running integer LLR + join-back
         "pipeline_bootstrap_ci",      # r11: hash weights -> order statistics
+        "pipeline_gini",              # global rank via bucketed_running
+        "llm_zipf_fit",               # DESC rank via negated bucket order
+        "pipeline_rfm_segments",      # three chained distributed_ntile
     ],
 )
 def test_partition_count_independence(spark, sf_dir, key, monkeypatch):
@@ -2957,6 +2960,26 @@ def test_bucketed_running_max_matches_prefix_replica(spark):
     empty = spark.createDataFrame([], "k long, v long")
     e = bucketed_running_max(empty, "k", "v")
     assert e.count() == 0 and "run_max_v" in e.columns
+
+
+def test_bucketed_running_rank_matches_sorted_replica(spark):
+    """The tie-break path: on 500 shuffled rows whose order column has
+    long plateaus (so tied values straddle the cut points), the global
+    rank from ``bucketed_running`` — the running count of a literal-1
+    column over (v, id) — equals the position in Python's sorted()
+    order, and the count total is the row count."""
+    from osm_airflow_spark.bucketing import bucketed_running
+
+    rows = [((i * 7919) % 4999, (i * i) % 7 + (i // 100)) for i in range(500)]
+    df = spark.createDataFrame(rows, "id long, v long").repartition(13)
+    out, totals = bucketed_running(
+        df.withColumn("one", F.lit(1)), "v", ["one"], ["id"]
+    )
+    srt = sorted((v, id_) for id_, v in rows)
+    want = {id_: rank for rank, (_, id_) in enumerate(srt, 1)}
+    got = {r["id"]: r["run_one"] for r in out.collect()}
+    assert got == want
+    assert totals == {"one": 500}
 
 
 def test_skyline_hand_dominance(spark, tmp_path):

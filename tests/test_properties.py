@@ -384,9 +384,11 @@ def test_bfs_frontier_matches_sequential_bfs(spark, edges):
     as a sequential BFS on arbitrary small graphs (seed = min
     labeled node)."""
     from collections import deque
+    from unittest import mock
 
     from pyspark.sql import functions as F  # noqa: F811
 
+    from osm_airflow_spark.operators import graph
     from osm_airflow_spark.operators.graph import bfs_hops
 
     named = [(f"n{a:02d}", f"n{b:02d}") for a, b in edges if a != b]
@@ -406,6 +408,11 @@ def test_bfs_frontier_matches_sequential_bfs(spark, edges):
     )
     labels = bfs_hops(und, seed_df, max_rounds=14)
     got = {r["node"]: r["hops"] for r in labels.collect()}
+    # a zero broadcast cap runs every round through the shuffle-join
+    # fallback; it must label the same rows
+    with mock.patch.object(graph, "BFS_BROADCAST_ROWS", 0):
+        shuffled = bfs_hops(und, seed_df, max_rounds=14).collect()
+    assert {r["node"]: r["hops"] for r in shuffled} == got
 
     adj: dict = {}
     for a, b in named:

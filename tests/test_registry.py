@@ -458,3 +458,19 @@ def test_no_plan_cache_switch_in_program_files():
         if banned.search(line)
     ]
     assert not hits, f"plan-cache switch referenced at {hits}"
+
+
+def test_bucket_offsets_only_in_bucketing():
+    """Every global rank, prefix and NTILE goes through bucketing.py:
+    no other engine file places approx-percentile cuts of its own."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "osm_airflow_spark"
+    hits = [
+        f"{f.relative_to(pkg)}:{i}"
+        for f in sorted(pkg.rglob("*.py"))
+        if f.name != "bucketing.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if "percentile_approx" in line
+    ]
+    assert not hits, f"hand-rolled bucket cuts at {hits}"
