@@ -22,6 +22,7 @@ so the engine package never depends on it.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from datetime import datetime, timedelta
 
 REGIONS = [
@@ -62,6 +63,11 @@ def transform_region(
     layers → dated partitioned snapshot (replaces the reference's
     docker-exec of pgosm_flex.py, osm_etl.py:17-18,71-72).
 
+    The element tables are read with the schemas ``ingest_pbf`` wrote
+    them with (``region`` still comes from partition discovery), so no
+    footer-reading schema-inference job runs per read. The layer is
+    built straight to its published columns: bbox, no line.
+
     Committer assumption: under a scheduler each mapped task is its
     own PROCESS with its own committer, and concurrent tasks write
     the same table root ``layers/highway``. Their partition sets are
@@ -77,13 +83,14 @@ def transform_region(
     from osm_airflow_spark.io import write_snapshot
     from osm_airflow_spark.plans.osm import build_highway_layer
     from osm_airflow_spark.session import get_spark
+    from osm_airflow_spark.sources.pbf import NODE_SCHEMA, WAY_SCHEMA
 
     from pyspark.sql import functions as F
 
     spark = get_spark(f"osm-etl-{subregion}")
-    nodes = spark.read.parquet(f"{data_dir}/{subregion}/nodes")
-    ways = spark.read.parquet(f"{data_dir}/{subregion}/ways")
-    layer = build_highway_layer(nodes, ways).drop("line")
+    nodes = spark.read.schema(NODE_SCHEMA).parquet(f"{data_dir}/{subregion}/nodes")
+    ways = spark.read.schema(WAY_SCHEMA).parquet(f"{data_dir}/{subregion}/ways")
+    layer = build_highway_layer(nodes, ways)
     # region MUST lead the partition spec: dynamic partition overwrite
     # replaces every (pgosm_date, geohash) partition a write touches,
     # so two regions sharing a geohash cell (any cell straddling a
@@ -98,14 +105,7 @@ def transform_region(
         # cost runs before the lock, so the barrier only covers the
         # (cheap) staged write of already-materialized partitions.
         layer = layer.localCheckpoint(eager=True)
-        with write_lock:
-            write_snapshot(
-                layer,
-                f"{data_dir}/layers/highway",
-                snapshot_date,
-                ("region", "geohash"),
-            )
-    else:
+    with write_lock or nullcontext():
         write_snapshot(
             layer,
             f"{data_dir}/layers/highway",

@@ -36,9 +36,10 @@ N_BUCKETS = 8
 def _bucketed(df: DataFrame, order_col: str) -> tuple[DataFrame, bool]:
     """``df`` plus an int ``_bkt`` column: the value-contiguous bucket
     id (0..N_BUCKETS-1) from approx-percentile cuts on ``order_col``.
-    The flag is False for an EMPTY frame — percentile_approx returns
-    NULL cuts there (a single-value frame returns real, equal cuts),
-    and every bucket id is 0.
+    The flag is False for an EMPTY frame, counted in the same agg as
+    the cuts. percentile_approx returns NULL cuts both there and when
+    every ``order_col`` value is NULL; the all-NULL frame is not empty
+    and keeps one bucket (every id is 0) on the real path.
 
     r14 (guide §1.2): the input executes THREE times in either caller
     (the cuts agg, the per-bucket offset collect, the output pass) and
@@ -61,13 +62,14 @@ def _bucketed(df: DataFrame, order_col: str) -> tuple[DataFrame, bool]:
     ):
         df = df.localCheckpoint(eager=True)
     probs = [i / N_BUCKETS for i in range(1, N_BUCKETS)]
-    cuts = df.agg(
-        F.percentile_approx(order_col, probs, 10_000).alias("c")
-    ).head()[0]
+    cuts, n = df.agg(
+        F.percentile_approx(order_col, probs, 10_000).alias("c"),
+        F.count(F.lit(1)).alias("n"),
+    ).head()
     bucket: Column = F.lit(0)
     for cut in cuts or []:
         bucket = bucket + F.when(F.col(order_col) > F.lit(cut), 1).otherwise(0)
-    return df.withColumn("_bkt", bucket.cast("int")), cuts is not None
+    return df.withColumn("_bkt", bucket.cast("int")), n > 0
 
 
 def _by_bucket(values: dict, base: Column) -> Column:

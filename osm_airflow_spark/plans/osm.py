@@ -184,7 +184,7 @@ def build_highway_layer(
     nodes: DataFrame, ways: DataFrame, promote: dict[str, str] | None = None
 ) -> DataFrame:
     """End-to-end thematic layer (the flex 'highway' table shape):
-    route → promote → assemble → bbox columns, ready for
+    route → promote → bbox columns, ready for
     io.write_snapshot. When MULTIPLE regions publish the same dated
     snapshot, partition_cols must LEAD with the writer's region
     (('region', 'geohash'), adding the column first) — dynamic
@@ -192,16 +192,32 @@ def build_highway_layer(
     geohash-only partitioning lets regions sharing a border cell
     clobber each other and per-region retries wipe neighbors
     (proven by the golden-fixture fan-out test; see
-    dags/osm_spark_dag.py transform_region)."""
+    dags/osm_spark_dag.py transform_region).
+
+    The published layer carries each way's bbox, not its line, so the
+    bbox is a plain aggregate: explode ``(way_id, node_id)``, resolve
+    the refs against the nodes, take min/max of lon and lat per way,
+    and join the promoted attributes back (corpus-bounded: one row per
+    way). It equals the ``array_min``/``array_max`` bbox of
+    ``assemble_way_lines`` without carrying tags on every ref row or
+    collecting and sorting the points. Ways with no resolvable ref drop
+    out; partially resolved ways bound the resolved subset."""
     routed = route_layer(ways, "highway")
     promoted = promote_tags(
         routed, promote or {"highway": "string", "name": "string", "maxspeed": "int"}
     )
-    assembled = assemble_way_lines(
-        promoted.select("way_id", "node_refs", "tags"), nodes
+    bbox = (
+        promoted.select("way_id", F.explode("node_refs").alias("node_id"))
+        .join(nodes.select("node_id", "lat", "lon"), "node_id")
+        .groupBy("way_id")
+        .agg(F.min("lon").alias("bbox_west"), F.min("lat").alias("bbox_south"),
+             F.max("lon").alias("bbox_east"), F.max("lat").alias("bbox_north"))
     )
-    keep = promoted.drop("node_refs", "tags", "residual_tags")
-    return assembled.join(keep, "way_id").withColumn(
+    keep = promoted.drop("node_refs", "residual_tags")
+    attrs = [c for c in keep.columns if c not in ("way_id", "tags")]
+    return bbox.join(keep, "way_id").select(
+        "way_id", "tags", *bbox.columns[1:], *attrs
+    ).withColumn(
         "geohash",
         geohash_cell((F.col("bbox_west") + F.col("bbox_east")) / 2,
                      (F.col("bbox_south") + F.col("bbox_north")) / 2),

@@ -9,9 +9,10 @@ engine the idiomatic split is:
    (nodes / ways / relations, schemas per SURVEY.md §1.1). PBF is a
    blocked format (~8k-element Blob blocks), so the scalable ingest
    is: list the blob offsets on the driver (header-only scan, bytes
-   ∝ block count), parallelize the offset ranges, decode each block
-   in an executor task (`mapInPandas` over an offset DataFrame),
-   write Parquet partitioned by element type + region.
+   ∝ block count), fan out a JVM range of blob ids over them, decode
+   each blob once in an executor task (`mapInPandas` over the ids),
+   persist the decoded union and write one Parquet table per element
+   type, partitioned by region.
 2. **Query forever after** on the columnar element tables — every
    operator in the engine works on those.
 
@@ -70,11 +71,13 @@ RELATION_SCHEMA = T.StructType(
 # One decode pass emits every element kind at once; the union schema
 # carries a kind discriminator plus the superset of per-kind columns
 # (unused ones null). Splitting back to the three typed tables is a
-# filter + rename — pure metadata, no second decode.
+# filter + rename — pure metadata, no second decode. elem_id is
+# declared nullable so the typed tables ingest_pbf writes keep the
+# optional id column Parquet readers have always seen there.
 UNION_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.StringType(), False),
-        T.StructField("elem_id", T.LongType(), False),
+        T.StructField("elem_id", T.LongType(), True),
         T.StructField("lat", T.DoubleType(), True),
         T.StructField("lon", T.DoubleType(), True),
         T.StructField("node_refs", T.ArrayType(T.LongType()), True),
@@ -95,27 +98,47 @@ def decode_blob(blob_bytes: bytes) -> dict:
     return pbf_wire.decode_blob(blob_bytes)
 
 
-def _offsets_df(spark: SparkSession, pbf_path: str) -> DataFrame:
-    # validated_data_offsets checks every OSMHeader's
-    # required_features BEFORE fanning out (r10): a file this decoder
-    # can't interpret correctly — e.g. a full-history dump declaring
-    # HistoricalInformation, whose deleted elements would silently
-    # read as live — is rejected here, not half-ingested. Shared with
-    # the osm_pbf Data Source so both entry points enforce it.
-    offsets = [
-        (pbf_path, start, length)
-        for (start, length) in pbf_wire.validated_data_offsets(pbf_path)
-    ]
+def _stride_order(n_blobs: int, n_part: int) -> list[int]:
+    """File positions in the order ``spark.range(n_blobs,
+    numPartitions=n_part)`` hands out ids. Range gives task ``i`` the
+    contiguous ids ``[i*n//p, (i+1)*n//p)``; blobs sit in file order
+    (node blocks, then ways, then relations), so contiguous positions
+    would hand one task every node blob. Positions are dealt
+    round-robin instead: the ``n % p`` left over from whole rounds go
+    first, one to each task with a larger id range, so the final
+    ``p`` blobs land on ``p`` different tasks."""
+    bounds = [i * n_blobs // n_part for i in range(n_part + 1)]
+    owner = [i for i in range(n_part) if bounds[i + 1] - bounds[i] > n_blobs // n_part]
+    owner += [(pos - len(owner)) % n_part for pos in range(len(owner), n_blobs)]
+    return sorted(range(n_blobs), key=owner.__getitem__)
+
+
+def _offsets_df(
+    spark: SparkSession, pbf_path: str
+) -> tuple[DataFrame, list[tuple[int, int]]]:
+    """The blob fan-out: a JVM ``range`` of blob ids plus the
+    validated ``(start, length)`` list those ids index, in stride
+    order. No Python rows and no shuffle plan the scan; the list
+    rides in the decode function's pickled command (pyspark
+    broadcasts a command past its 1 MB threshold, so a planet's ~80k
+    offsets are not re-sent per task).
+
+    validated_data_offsets checks every OSMHeader's required_features
+    BEFORE fanning out (r10): a file this decoder can't interpret
+    correctly — e.g. a full-history dump declaring
+    HistoricalInformation, whose deleted elements would silently read
+    as live — is rejected here, not half-ingested. Shared with the
+    osm_pbf Data Source so both entry points enforce it."""
+    offsets = pbf_wire.validated_data_offsets(pbf_path)
     n_part = max(1, min(len(offsets), spark.sparkContext.defaultParallelism))
-    return spark.createDataFrame(
-        offsets, "path string, start long, length long"
-    ).repartition(n_part)
+    ordered = [offsets[pos] for pos in _stride_order(len(offsets), n_part)]
+    return spark.range(len(offsets), numPartitions=n_part), ordered
 
 
-def _decode_union(iterator):
-    """mapInPandas body: each blob is read + decompressed + parsed
-    exactly ONCE, emitting all three element kinds from that single
-    pass (a planet blob mixes kinds across its PrimitiveGroups).
+def _decode_union(pbf_path: str, offsets: list[tuple[int, int]]):
+    """mapInPandas body over blob ids: each blob is read + decompressed
+    + parsed exactly ONCE, emitting all three element kinds from that
+    single pass (a planet blob mixes kinds across its PrimitiveGroups).
 
     Emission is COLUMNAR and PER-BLOB (r14, found by the 239 MB
     volume probe — tools/pbf_volume_probe.py). The previous form
@@ -127,93 +150,56 @@ def _decode_union(iterator):
     the full pass took 271 s. Per-blob numpy-backed frames bound
     worker memory to one blob's rows and let Arrow copy primitive
     columns without boxing: 271 s → 28 s for the same file."""
+
+    def decode(iterator):
+        for pdf in iterator:
+            with open(pbf_path, "rb") as fh:
+                for blob_id in pdf["id"]:
+                    start, length = offsets[blob_id]
+                    fh.seek(start)
+                    yield from _union_frames(
+                        pbf_wire.decode_blob_columnar(fh.read(length))
+                    )
+
+    return decode
+
+
+def _union_frames(chunks):
+    """One decoded blob's ``(kind, payload)`` chunks → union-schema
+    pandas frames, one per chunk; columns a kind lacks stay null."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
 
-    for pdf in iterator:
-        for path, start, length in pdf.itertuples(index=False):
-            with open(path, "rb") as fh:
-                fh.seek(start)
-                chunks = pbf_wire.decode_blob_columnar(fh.read(length))
-            for kind, payload in chunks:
-                if kind == "dense":
-                    yield pd.DataFrame({
-                        _UNION_COLS[0]: "node",
-                        _UNION_COLS[1]: payload["node_id"],
-                        _UNION_COLS[2]: payload["lat"],
-                        _UNION_COLS[3]: payload["lon"],
-                        _UNION_COLS[4]: None,
-                        _UNION_COLS[5]: None,
-                        _UNION_COLS[6]: pd.Series(
-                            payload["tags"], dtype=object
-                        ),
-                    })
-                elif kind == "nodes":
-                    n = payload
-                    yield pd.DataFrame({
-                        _UNION_COLS[0]: "node",
-                        _UNION_COLS[1]: np.fromiter(
-                            (x["node_id"] for x in n), dtype="int64",
-                            count=len(n),
-                        ),
-                        _UNION_COLS[2]: np.fromiter(
-                            (x["lat"] for x in n), dtype="float64",
-                            count=len(n),
-                        ),
-                        _UNION_COLS[3]: np.fromiter(
-                            (x["lon"] for x in n), dtype="float64",
-                            count=len(n),
-                        ),
-                        _UNION_COLS[4]: None,
-                        _UNION_COLS[5]: None,
-                        _UNION_COLS[6]: pd.Series(
-                            [x["tags"] for x in n], dtype=object
-                        ),
-                    })
-                elif kind == "ways":
-                    w = payload
-                    yield pd.DataFrame({
-                        _UNION_COLS[0]: "way",
-                        _UNION_COLS[1]: np.fromiter(
-                            (x["way_id"] for x in w), dtype="int64",
-                            count=len(w),
-                        ),
-                        _UNION_COLS[2]: None,
-                        _UNION_COLS[3]: None,
-                        _UNION_COLS[4]: pd.Series(
-                            [x["node_refs"] for x in w], dtype=object
-                        ),
-                        _UNION_COLS[5]: None,
-                        _UNION_COLS[6]: pd.Series(
-                            [x["tags"] for x in w], dtype=object
-                        ),
-                    })
-                else:
-                    r = payload
-                    yield pd.DataFrame({
-                        _UNION_COLS[0]: "relation",
-                        _UNION_COLS[1]: np.fromiter(
-                            (x["rel_id"] for x in r), dtype="int64",
-                            count=len(r),
-                        ),
-                        _UNION_COLS[2]: None,
-                        _UNION_COLS[3]: None,
-                        _UNION_COLS[4]: None,
-                        _UNION_COLS[5]: pd.Series(
-                            [x["members"] for x in r], dtype=object
-                        ),
-                        _UNION_COLS[6]: pd.Series(
-                            [x["tags"] for x in r], dtype=object
-                        ),
-                    })
+    def column(rows, key, dtype=object):
+        if dtype is object:
+            return pd.Series([x[key] for x in rows], dtype=object)
+        return np.fromiter((x[key] for x in rows), dtype=dtype, count=len(rows))
+
+    for kind, rows in chunks:
+        cols = dict.fromkeys(_UNION_COLS)
+        if kind == "dense":  # already columnar: numpy ids and coordinates
+            cols.update(kind="node", elem_id=rows["node_id"], lat=rows["lat"],
+                        lon=rows["lon"], tags=pd.Series(rows["tags"], dtype=object))
+        elif kind == "nodes":
+            cols.update(kind="node", elem_id=column(rows, "node_id", "int64"),
+                        lat=column(rows, "lat", "float64"),
+                        lon=column(rows, "lon", "float64"), tags=column(rows, "tags"))
+        elif kind == "ways":
+            cols.update(kind="way", elem_id=column(rows, "way_id", "int64"),
+                        node_refs=column(rows, "node_refs"), tags=column(rows, "tags"))
+        else:
+            cols.update(kind="relation", elem_id=column(rows, "rel_id", "int64"),
+                        members=column(rows, "members"), tags=column(rows, "tags"))
+        yield pd.DataFrame(cols)
 
 
 def read_pbf_elements(spark: SparkSession, pbf_path: str) -> DataFrame:
     """PBF → ONE unioned element DataFrame (kind-discriminated),
-    parallel by blob offset. Each executor task opens the file at its
-    own offsets — no driver-side decode, no full-file broadcast, and
+    parallel by blob. Each executor task opens the file at its own
+    offsets — no driver-side decode, no full-file broadcast, and
     each blob is decoded once per action (not once per element kind)."""
-    return _offsets_df(spark, pbf_path).mapInPandas(_decode_union, UNION_SCHEMA)
+    ids, offsets = _offsets_df(spark, pbf_path)
+    return ids.mapInPandas(_decode_union(pbf_path, offsets), UNION_SCHEMA)
 
 
 def split_elements(union: DataFrame) -> dict[str, DataFrame]:
@@ -237,8 +223,8 @@ def read_pbf(spark: SparkSession, pbf_path: str) -> dict[str, DataFrame]:
     """PBF → {nodes, ways, relations} DataFrames derived from the
     single-pass union scan. Lazy caveat: running separate actions on
     all three re-decodes (Spark re-executes the shared scan per
-    action) — the ingest-once path (``ingest_pbf``) stages the union
-    to Parquet first so the expensive decode happens exactly once."""
+    action) — the ingest-once path (``ingest_pbf``) persists the union
+    across its writes so the expensive decode happens exactly once."""
     return split_elements(read_pbf_elements(spark, pbf_path))
 
 
@@ -247,37 +233,22 @@ def ingest_pbf(
 ) -> dict[str, str]:
     """PBF → element Parquet, the ingest-once step.
 
-    Two passes: (1) the decode pass writes the kind-partitioned union
-    Parquet — every blob decompressed + parsed exactly once; (2) a
-    columnar pass per kind reads back only its partition directory
-    (partition-pruned) and lays down the typed table. Pass 2 touches
-    already-columnar data, so total decode cost is 1× (the previous
-    design paid 3×). At planet scale (~70 GB PBF / ~80k blobs) pass 1
-    is embarrassingly parallel; the final layout (type dir + region
+    One decode pass: the union is persisted, the first typed write
+    decodes every blob exactly once into executor storage, and the
+    other two writes filter the persisted rows. Nothing round-trips
+    through the output filesystem, and persist (unlike
+    ``localCheckpoint``) keeps the lineage, so a lost executor
+    recomputes only its own blobs. At planet scale (~70 GB PBF / ~80k
+    blobs) the decode is embarrassingly parallel and the persisted
+    union spills to executor disk; the final layout (type dir + region
     partition) is what SCALE.md's layout contract expects downstream."""
-    staged = f"{out_dir}/_staged_elements/region={region}"
-    read_pbf_elements(spark, pbf_path).write.mode("overwrite").partitionBy(
-        "kind"
-    ).parquet(staged)
-    union = spark.read.parquet(staged)  # kind restored as partition column
+    union = read_pbf_elements(spark, pbf_path).persist()
     paths = {}
-    for kind, df in split_elements(union).items():
-        path = f"{out_dir}/{kind}/region={region}"
-        df.write.mode("overwrite").parquet(path)
-        paths[kind] = path
-    # The staging union roughly doubles ingest storage at planet scale
-    # — drop it once every typed write has landed. Hadoop FS delete so
-    # the same code works on HDFS/S3A paths, not just local; only THIS
-    # region's staging goes (a concurrent ingest of another region may
-    # still be mid-flight under the same _staged_elements root).
-    jvm = spark.sparkContext._jvm
-    staged_path = jvm.org.apache.hadoop.fs.Path(staged)
-    fs = staged_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(staged_path, True)
-    root = jvm.org.apache.hadoop.fs.Path(f"{out_dir}/_staged_elements")
     try:
-        if fs.exists(root) and len(fs.listStatus(root)) == 0:
-            fs.delete(root, False)  # non-recursive: refuses if racing
-    except Exception:
-        pass  # another region's ingest owns the root right now
+        for kind, df in split_elements(union).items():
+            path = f"{out_dir}/{kind}/region={region}"
+            df.write.mode("overwrite").parquet(path)
+            paths[kind] = path
+    finally:
+        union.unpersist()
     return paths

@@ -1273,6 +1273,13 @@ def test_bucketed_running_empty_input(spark):
     out1, totals1 = bucketed_running(one, "v", ["n"])
     assert [(r["v"], r["run_n"]) for r in out1.collect()] == [(5, 2)]
     assert totals1 == {"n": 2}
+    # an all-NULL order column also gets NULL cuts, but the frame is
+    # not empty: it must take the real path (one bucket), not the
+    # zero-row one
+    nulls = spark.createDataFrame([(None, 1)] * 3, "v long, n long")
+    outn, totn = bucketed_running(nulls, "v", ["n"])
+    assert sorted(r["run_n"] for r in outn.collect()) == [1, 2, 3]
+    assert totn == {"n": 3}
     # r10 ADVICE: the empty path types run_<col> from the SUM-result
     # type (not a hardcoded long), so a non-long sum column keeps the
     # same degenerate schema a future non-empty path would produce

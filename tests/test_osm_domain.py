@@ -3,6 +3,7 @@
 geometry assembly, WKB encoding — the reference's delegated semantics
 (/root/reference/README.md:80-93) verified row by row."""
 
+import os
 import struct
 
 import pytest
@@ -117,6 +118,75 @@ def test_build_highway_layer_end_to_end(nodes, ways):
     assert set(rows) == {100, 101}  # path way has no resolvable geometry
     assert rows[100]["highway"] == "primary"
     assert "geohash" in layer.columns
+
+
+def _layer_via_lines(nodes, ways):
+    """The highway layer built the long way: assemble every way's
+    ordered line, take its bbox with array_min/array_max, join the
+    promoted attributes back and drop the line."""
+    promoted = promote_tags(
+        route_layer(ways, "highway"),
+        {"highway": "string", "name": "string", "maxspeed": "int"},
+    )
+    assembled = assemble_way_lines(
+        promoted.select("way_id", "node_refs", "tags"), nodes
+    )
+    keep = promoted.drop("node_refs", "tags", "residual_tags")
+    return (
+        assembled.join(keep, "way_id")
+        .withColumn(
+            "geohash",
+            geohash_cell((F.col("bbox_west") + F.col("bbox_east")) / 2,
+                         (F.col("bbox_south") + F.col("bbox_north")) / 2),
+        )
+        .drop("line")
+    )
+
+
+def test_highway_layer_bbox_matches_assembled_lines(spark, nodes, ways, tmp_path):
+    """build_highway_layer's aggregated bbox equals the array_min /
+    array_max bbox of the assembled lines, row for row and column for
+    column, on the micro-fixture, the golden file and the adversarial
+    file (coordinate corners). Each runs twice, the second time with
+    every third node missing, so partially resolved and unresolvable
+    ways are covered."""
+    import tools.make_adversarial_pbf as adv
+
+    from osm_airflow_spark.sources.pbf import read_pbf
+
+    def decoded(path):
+        # checkpointed: each case below runs several actions, and the
+        # adversarial file's >16 MB blob should be decoded once
+        tables = read_pbf(spark, path)
+        return {k: tables[k].localCheckpoint() for k in ("nodes", "ways")}
+
+    golden = decoded(
+        os.path.join(os.path.dirname(__file__), "fixtures", "golden_1000.osm.pbf")
+    )
+    adv_path = str(tmp_path / "adversarial.osm.pbf")
+    adv.build(adv_path)
+    hostile = decoded(adv_path)
+    cases = [
+        (nodes, ways),
+        (golden["nodes"], golden["ways"]),
+        # the adversarial file tags only one way, whose refs are all
+        # absent: tag every way so the resolvable one is routed too
+        (hostile["nodes"], hostile["ways"].withColumn(
+            "tags", F.create_map(F.lit("highway"), F.lit("track")))),
+    ]
+    columns = ["way_id", "tags", "bbox_west", "bbox_south", "bbox_east",
+               "bbox_north", "highway", "name", "maxspeed", "geohash"]
+    for n, w in cases:
+        for node_set in (n, n.where(F.col("node_id") % 3 != 0)):
+            got = build_highway_layer(node_set, w)
+            want = _layer_via_lines(node_set, w)
+            assert got.columns == want.columns == columns
+            rows = sorted(got.collect(), key=lambda r: r["way_id"])
+            assert rows == sorted(want.collect(), key=lambda r: r["way_id"])
+    # the thinned micro-fixture: way 100 keeps refs 1 and 2 of [3, 1, 2]
+    thin = build_highway_layer(nodes.where(F.col("node_id") % 3 != 0), ways)
+    row = {r["way_id"]: r for r in thin.collect()}[100]
+    assert (row["bbox_west"], row["bbox_east"]) == (20.0, 21.0)
 
 
 def test_geohash_cell_bounds(spark):

@@ -291,10 +291,9 @@ def test_pbf_spark_ingest_and_assembly(spark, pbf_file, tmp_path):
     out = ingest_pbf(spark, pbf_file, str(tmp_path / "elements"), region="test")
     back = spark.read.parquet(out["nodes"])
     assert back.count() == 4 and "tags" in back.columns
-    # staging union is an intermediate, not a deliverable: it must be
-    # cleaned up after the typed writes land (it doubles ingest
-    # storage at planet scale if left behind)
-    assert not (tmp_path / "elements" / "_staged_elements").exists()
+    # the typed tables are the only deliverable: no intermediate
+    # copy of the union is left beside them
+    assert sorted(os.listdir(tmp_path / "elements")) == ["nodes", "relations", "ways"]
 
 
 def test_clustered_write_tightens_row_group_stats(spark, sf_dir, tmp_path):
@@ -1194,6 +1193,97 @@ def test_dense_volume_file_decodes_exactly(spark, tmp_path):
         nodes.select(F.col("elem_id").alias("ref")), "ref", "left_anti"
     ).count()
     assert dangling == 0
+
+
+def test_ingest_pbf_tables_equal_read_pbf_split(spark, tmp_path):
+    """On the dense multi-blob file, the three typed tables ingest_pbf
+    writes (one persisted decode pass) equal the split read_pbf
+    returns, row for row and in every column, and out_dir holds only
+    those three tables. Ids stay optional in the written files, as
+    they always were for Parquet readers."""
+    import sys
+
+    import pyarrow.parquet as pq
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.make_dense_pbf import build
+
+    from osm_airflow_spark.sources.pbf import ingest_pbf, read_pbf_elements, split_elements
+
+    path = str(tmp_path / "dense.osm.pbf")
+    facts = build(path, target_mb=8)
+    out_dir = tmp_path / "elements"
+    paths = ingest_pbf(spark, path, str(out_dir), region="dense")
+    assert sorted(os.listdir(out_dir)) == ["nodes", "relations", "ways"]
+
+    def canon(df):
+        # maps cannot be compared by exceptAll; sorted entries can
+        return df.withColumn("tags", F.array_sort(F.map_entries("tags")))
+
+    # read_pbf's own composition, over a union checkpointed once so
+    # the comparisons below decode the file once, not once per action
+    expected = split_elements(read_pbf_elements(spark, path).localCheckpoint())
+    counts = {}
+    for kind, key in (("nodes", "node_id"), ("ways", "way_id"), ("relations", "rel_id")):
+        got = canon(spark.read.parquet(paths[kind]))
+        want = canon(expected[kind])
+        assert got.columns == want.columns
+        n = got.count()
+        assert n == want.count()
+        assert got.exceptAll(want).isEmpty(), kind
+        counts[kind] = n
+        written = pq.ParquetDataset(paths[kind]).files[0]
+        assert pq.read_schema(written).field(key).nullable
+    assert counts == {"nodes": facts["nodes"], "ways": facts["ways"], "relations": 0}
+
+
+def test_pbf_fanout_deals_blobs_round_robin(spark, tmp_path):
+    """The blob fan-out is a JVM range over stride-ordered offsets:
+    per-task blob counts differ by at most one, and the way blobs at
+    the tail of the file spread over every task instead of piling onto
+    the last ones (contiguous id ranges would leave the first tasks
+    with node blobs only)."""
+    from pyspark.sql.functions import spark_partition_id
+
+    from osm_airflow_spark.sources.pbf import _offsets_df, _stride_order, read_pbf_elements
+    from osm_airflow_spark.sources.pbf_wire import (
+        encode_fileblock,
+        encode_primitive_block,
+    )
+
+    n_part = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "blocked.osm.pbf")
+    with open(path, "wb") as fh:
+        fh.write(encode_fileblock(encode_primitive_block(), "OSMHeader"))
+        for b in range(n_part + 4):  # node blobs first, as in real files
+            fh.write(encode_fileblock(encode_primitive_block(nodes=[
+                {"node_id": 10 * b + i, "lat": 1.0, "lon": 2.0, "tags": {}}
+                for i in range(3)
+            ])))
+        for b in range(n_part):
+            fh.write(encode_fileblock(encode_primitive_block(ways=[
+                {"way_id": b, "node_refs": [10 * b], "tags": {}}
+            ])))
+
+    ids, _ = _offsets_df(spark, path)
+    per_task = dict(ids.groupBy(spark_partition_id().alias("p")).count().collect())
+    assert len(per_task) == n_part
+    assert max(per_task.values()) - min(per_task.values()) <= 1
+
+    kinds = {
+        (r["p"], r["kind"])
+        for r in read_pbf_elements(spark, path)
+        .select(spark_partition_id().alias("p"), "kind")
+        .distinct()
+        .collect()
+    }
+    assert {p for p, kind in kinds if kind == "way"} == set(range(n_part))
+    assert {p for p, kind in kinds if kind == "node"} == set(range(n_part))
+
+    # the order is a permutation for any shape, including more tasks
+    # than a whole round
+    for n, p in ((1, 1), (5, 8), (20, 8), (21, 4), (80_003, 32)):
+        assert sorted(_stride_order(n, p)) == list(range(n))
 
 
 def test_columnar_decode_identical_to_dict_decode(tmp_path):

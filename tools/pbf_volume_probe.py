@@ -7,11 +7,12 @@ The file is cached under /tmp keyed by target size (same bytes every
 run — the generator is deterministic), so repeated probes and the
 bench pay generation once per box.
 
-What the numbers mean at 100 TB: decode parallelism is one
-InputPartition per blob (sources/pbf.py:_offsets_df), so throughput
-scales linearly with executors as long as per-task memory stays
-bounded — which is what worker_peak_rss_mb proves (one inflated
-blob + its row batch, NOT file-proportional).
+What the numbers mean at 100 TB: the unit of decode parallelism is
+the blob — a JVM range of blob ids over the validated offsets
+(sources/pbf.py:_offsets_df) — so throughput scales linearly with
+executors as long as per-task memory stays bounded, which is what
+worker_peak_rss_mb proves (one inflated blob + its row batch, NOT
+file-proportional).
 
 Usage: python tools/pbf_volume_probe.py [target_mb] → one JSON line.
 """
@@ -65,8 +66,11 @@ def probe(spark, target_mb: int) -> dict:
     elements = sum(counts.values())
 
     # per-worker peak RSS: decode each blob again inside a probe UDF
-    # that reports ru_maxrss (KB on Linux) — proves per-task memory is
-    # one-inflated-blob bounded, not file-proportional
+    # over the same fan-out (blob ids indexing the stride-ordered
+    # offsets) that reports ru_maxrss (KB on Linux) — proves per-task
+    # memory is one-inflated-blob bounded, not file-proportional
+    ids, offsets = _offsets_df(spark, path)
+
     def _rss(iterator):
         import resource
 
@@ -76,16 +80,16 @@ def probe(spark, target_mb: int) -> dict:
 
         peak = 0
         for pdf in iterator:
-            for p, start, length in pdf.itertuples(index=False):
-                with open(p, "rb") as fh:
+            with open(path, "rb") as fh:
+                for blob_id in pdf["id"]:
+                    start, length = offsets[blob_id]
                     fh.seek(start)
                     pbf_wire.decode_blob(fh.read(length))
-                peak = max(peak, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
+                    peak = max(peak, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
         yield pd.DataFrame({"peak_kb": [peak]})
 
     peak_kb = (
-        _offsets_df(spark, path)
-        .mapInPandas(_rss, "peak_kb long")
+        ids.mapInPandas(_rss, "peak_kb long")
         .agg(F.max("peak_kb"))
         .first()[0]
     )
