@@ -18,10 +18,14 @@ engine the idiomatic split is:
 
 No protobuf wheel exists in this image, so the block decoder is a
 pure-Python wire-format reader (sources/pbf_wire.py) — the protobuf
-encoding and the OSM PBF messages are both small public specs. A
-planet file (~70 GB) is ~80k independent blobs: the unit of
-parallelism is the blob, and decode throughput scales linearly with
-executors. pbf_wire.write_pbf is the matching sink.
+encoding and the OSM PBF messages are both small public specs. There
+is one block decoder, ``pbf_wire.decode_blob_columnar``; this module's
+``_decode_union`` and the ``osm_pbf`` Data Source both turn its chunks
+into union-schema frames with ``_union_frames``, and a corrupt blob
+fails the task with a ValueError. A planet file (~70 GB) is ~80k
+independent blobs: the unit of parallelism is the blob, and decode
+throughput scales linearly with executors. pbf_wire.write_pbf is the
+matching sink.
 """
 
 from __future__ import annotations
@@ -90,12 +94,6 @@ UNION_SCHEMA = T.StructType(
     ]
 )
 _UNION_COLS = [f.name for f in UNION_SCHEMA.fields]
-
-
-def decode_blob(blob_bytes: bytes) -> dict:
-    """Decode one PBF Blob into element row dicts (pure function —
-    runs on executors). See pbf_wire for the wire-level decode."""
-    return pbf_wire.decode_blob(blob_bytes)
 
 
 def _stride_order(n_blobs: int, n_part: int) -> list[int]:

@@ -16,7 +16,9 @@ package's internals at call sites).
 
 Rows use the same kind-discriminated union schema as sources/pbf.py
 (one decode pass per blob emits nodes, ways, and relations
-together). Partition count = blob count; Spark schedules them like
+together), and are built the same way: ``pbf._union_frames`` over
+``pbf_wire.decode_blob_columnar``'s chunks, handed to Spark as Arrow
+record batches. Partition count = blob count; Spark schedules them like
 any other scan, so ``spark.sql.files``-style locality tuning is
 unnecessary — each task reads exactly its [start, start+length)
 byte range.
@@ -27,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from osm_airflow_spark.sources import pbf_wire
-from osm_airflow_spark.sources.pbf import UNION_SCHEMA
+from osm_airflow_spark.sources.pbf import UNION_SCHEMA, _union_frames
 
 
 class PbfBlobPartition(InputPartition):
@@ -56,18 +58,15 @@ class OsmPbfReader(DataSourceReader):
         ]
 
     def read(self, partition: PbfBlobPartition):
+        import pyarrow as pa  # noqa: PLC0415
+        from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+        schema = to_arrow_schema(UNION_SCHEMA)
         with open(partition.path, "rb") as fh:
             fh.seek(partition.start)
-            dec = pbf_wire.decode_blob(fh.read(partition.length))
-        for r in dec["nodes"]:
-            yield ("node", r["node_id"], r["lat"], r["lon"], None, None, r["tags"])
-        for r in dec["ways"]:
-            yield ("way", r["way_id"], None, None, r["node_refs"], None, r["tags"])
-        for r in dec["relations"]:
-            members = [
-                (m["mtype"], m["ref"], m["role"]) for m in r["members"]
-            ]
-            yield ("relation", r["rel_id"], None, None, None, members, r["tags"])
+            chunks = pbf_wire.decode_blob_columnar(fh.read(partition.length))
+        for frame in _union_frames(chunks):
+            yield pa.RecordBatch.from_pandas(frame, schema=schema, preserve_index=False)
 
 
 class OsmPbfDataSource(DataSource):

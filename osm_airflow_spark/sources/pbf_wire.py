@@ -12,6 +12,11 @@ blob, never the file.
 Wire types used by OSM PBF: 0 = varint, 2 = length-delimited. The
 codec is symmetric (encode + decode) — encode exists for the PBF
 *sink* and for building test fixtures; decode is the ingest path.
+One function walks a PrimitiveBlock (``decode_blob_columnar``, via
+``_decode_block``); ingest, the ``osm_pbf`` Data Source and the
+row-dict ``decode_blob`` all run it, so the golden, fuzz and
+malformed-input tests pin the code ingest runs. Corrupt input raises
+ValueError (zlib.error only from a corrupt zlib stream).
 
 OSM PBF message numbers (osmformat.proto / fileformat.proto, public):
 
@@ -116,6 +121,9 @@ def first(fields: dict[int, list], no: int, default=None):
     return vals[0] if vals else default
 
 
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
 def _decode_packed_scalar(buf: bytes, signed: bool, delta: bool) -> list[int]:
     out: list[int] = []
     pos = 0
@@ -129,6 +137,8 @@ def _decode_packed_scalar(buf: bytes, signed: bool, delta: bool) -> list[int]:
             out.append(acc)
         else:
             out.append(v)
+    if delta and out and not _INT64_MIN <= min(out) <= max(out) <= _INT64_MAX:
+        raise ValueError("delta-coded packed field leaves the int64 range")
     return out
 
 
@@ -145,12 +155,17 @@ def decode_packed(buf: bytes, signed: bool = False, delta: bool = False) -> list
     64-bit accumulator; zigzag and delta run in int64 two's
     complement, matching ``_signed64`` reinterpretation. Guards fall
     back to the scalar loop for anything outside those bounds: a
-    varint over 10 bytes (would need a >63-bit shift), a truncated
-    trailing varint (scalar path raises the same IndexError callers
-    expect), or an unsigned delta sum crossing 2^62 (python ints
-    don't wrap; numpy would). Measured ~6x on a 50k-node DenseNodes
-    blob; values bit-identical on every golden/adversarial fixture
-    (tests/test_sources.py)."""
+    varint of 10 or more bytes (would need a >63-bit shift), a
+    truncated trailing varint (the scalar loop raises IndexError,
+    which the block decoder reports as ValueError), or a delta stream
+    whose running sum could leave int64 (n values of up to w bytes,
+    n * 2^(7w) >= 2^63; real extracts stay far below it). One
+    int64 rule for both paths: a delta sum outside int64 raises
+    ValueError instead of wrapping (numpy) or growing past what the
+    Long columns hold (Python ints). Measured ~6x on a 50k-node
+    DenseNodes blob; ``_decode_packed_np`` equals
+    ``_decode_packed_scalar`` wherever it answers (property test in
+    tests/test_properties.py)."""
     arr = _decode_packed_np(buf, signed, delta)
     if arr is None:
         return _decode_packed_scalar(buf, signed, delta)
@@ -160,8 +175,8 @@ def decode_packed(buf: bytes, signed: bool = False, delta: bool = False) -> list
 def _decode_packed_np(buf: bytes, signed: bool, delta: bool):
     """The vectorized core of decode_packed; returns a numpy array,
     or None when the stream needs the scalar loop (short buffers,
-    truncated trailing varint, >9-byte varints, unsigned delta sums
-    crossing 2^62)."""
+    truncated trailing varint, >9-byte varints, delta sums that could
+    leave int64)."""
     if len(buf) < 64:
         return None
     import numpy as np  # noqa: PLC0415
@@ -174,10 +189,16 @@ def _decode_packed_np(buf: bytes, signed: bool, delta: bool):
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    if int((ends - starts).max()) > 8:
+    width = int((ends - starts).max()) + 1  # longest varint, in bytes
+    if width > 9:
         # 10-byte varints can carry bits past 2^63 (full sint64
         # zigzag range / non-canonical encodings) where uint64
         # shift-wrap and python-int accumulation diverge — scalar
+        return None
+    # every value is below 2^(7 * width), so no running sum of n of
+    # them can leave int64 while n * 2^(7 * width) < 2^63; past that
+    # the scalar loop decides
+    if delta and len(ends) << (7 * width) > _INT64_MAX:
         return None
     gid = np.zeros(len(b), dtype=np.int64)
     gid[1:] = np.cumsum(term[:-1])
@@ -193,8 +214,6 @@ def _decode_packed_np(buf: bytes, signed: bool, delta: bool):
     else:
         vals = sums
     if delta:
-        if not signed and int(sums.max()) >= (1 << 62):
-            return None
         vals = np.cumsum(vals.astype(np.int64))
     return vals
 
@@ -237,24 +256,27 @@ def _signed64(v: int) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def _tags(keys: list[int], vals: list[int], strings: list[str]) -> dict[str, str]:
-    return {strings[k]: strings[v] for k, v in zip(keys, vals)}
-
-
 def decode_blob(blob_bytes: bytes) -> dict:
     """One OSMData Blob → {"nodes": [...], "ways": [...],
     "relations": [...]} row dicts matching pbf.NODE/WAY/RELATION
-    schemas. Pure function of the bytes — safe to run on any
-    executor. Untrusted-input bounds: decompression is capped at the
-    declared ``raw_size`` (itself capped at the spec's 32MB blob
-    limit), so a zlib bomb can't OOM an executor; declared-vs-actual
-    size mismatch and truncation surface as ValueError, not raw
-    IndexError (the varint hot path stays branch-free — truncation
-    is caught once here, not per byte)."""
-    try:
-        return _decode_blob(blob_bytes)
-    except IndexError as e:
-        raise ValueError(f"truncated or corrupt PBF blob: {e!r}") from e
+    schemas: a flatten of ``decode_blob_columnar``'s chunks, for
+    callers that want plain rows (tests, the perfbench extract check).
+    Raises what the columnar decoder raises."""
+    out: dict[str, list] = {"nodes": [], "ways": [], "relations": []}
+    for kind, payload in decode_blob_columnar(blob_bytes):
+        if kind == "dense":
+            out["nodes"] += (
+                {"node_id": i, "lat": lat, "lon": lon, "tags": t}
+                for i, lat, lon, t in zip(
+                    payload["node_id"].tolist(),
+                    payload["lat"].tolist(),
+                    payload["lon"].tolist(),
+                    payload["tags"],
+                )
+            )
+        else:
+            out[kind] += payload
+    return out
 
 
 def inflate_blob(blob_bytes: bytes) -> bytes:
@@ -336,8 +358,40 @@ def decode_header(blob_bytes: bytes) -> dict:
     }
 
 
-def _decode_blob(blob_bytes: bytes) -> dict:
-    data = inflate_blob(blob_bytes)
+def decode_blob_columnar(blob_bytes: bytes) -> list[tuple[str, object]]:
+    """One OSMData Blob → ordered chunks ``[("dense", cols), ("nodes",
+    rows), ("ways", rows), ("relations", rows), ...]`` in
+    PrimitiveGroup order. This is the block decoder: ingest
+    (``pbf._decode_union``) and the ``osm_pbf`` Data Source run it on
+    executors, and ``decode_blob`` flattens it. ``dense`` chunks carry
+    numpy arrays (node_id/lat/lon) plus a tags list, so the dominant
+    planet payload crosses into pandas/Arrow without 50k-per-blob
+    python dicts; the three minority kinds are row dicts matching
+    pbf.NODE/WAY/RELATION schemas.
+
+    Coordinates compute ``NANO * (offset + granularity * raw)`` with
+    the integer part exact (|raw·gran + off| < 2^53 for legal
+    coordinates) and one int→float round-to-nearest conversion: the
+    same IEEE ops on numpy int64 arrays (dense) and on Python ints
+    (plain nodes). Pinned bit-exact against the independent golden
+    fixtures (tests/test_sources.py).
+
+    Pure function of the bytes. Untrusted-input bounds: decompression
+    is capped at the declared ``raw_size`` (itself capped at the
+    spec's 32MB blob limit), so a zlib bomb can't OOM an executor;
+    size mismatch, truncation and corrupt field shapes surface as
+    ValueError, not raw IndexError / TypeError (the varint hot path
+    stays branch-free — corruption is caught once here, not per
+    byte)."""
+    try:
+        return _decode_block(inflate_blob(blob_bytes))
+    except (IndexError, TypeError) as e:
+        raise ValueError(f"truncated or corrupt PBF blob: {e!r}") from e
+
+
+def _decode_block(data: bytes) -> list[tuple[str, object]]:
+    import numpy as np  # noqa: PLC0415
+
     block = parse_message(data)
     strings = [
         s.decode("utf-8") for s in parse_message(first(block, 1, b"")).get(1, [])
@@ -353,126 +407,50 @@ def _decode_blob(blob_bytes: bytes) -> dict:
     lat_offset = _signed64(first(block, 19, 0))
     lon_offset = _signed64(first(block, 20, 0))
 
-    def to_deg(offset: int, raw: int) -> float:
+    def to_deg(offset, raw):  # raw: int64 array (dense) or int (plain)
         return NANO * (offset + granularity * raw)
 
-    nodes: list[dict] = []
-    ways: list[dict] = []
-    relations: list[dict] = []
+    def delta_column(buf: bytes) -> "np.ndarray":
+        arr = _decode_packed_np(buf, True, True)
+        if arr is None:  # outside the vectorized bounds: exact scalar decode
+            arr = np.array(_decode_packed_scalar(buf, True, True), dtype=np.int64)
+        return arr
 
-    for group_buf in block.get(2, []):
-        group = parse_message(group_buf)
+    def tags(msg: dict) -> dict[str, str]:
+        keys = decode_packed(first(msg, 2, b""))
+        vals = decode_packed(first(msg, 3, b""))
+        return {strings[k]: strings[v] for k, v in zip(keys, vals)}
 
-        for node_buf in group.get(1, []):  # plain Nodes
-            nd = parse_message(node_buf)
-            nodes.append(
-                {
-                    "node_id": zigzag_decode(first(nd, 1, 0)),
-                    "lat": to_deg(lat_offset, zigzag_decode(first(nd, 8, 0))),
-                    "lon": to_deg(lon_offset, zigzag_decode(first(nd, 9, 0))),
-                    "tags": _tags(
-                        decode_packed(first(nd, 2, b"")),
-                        decode_packed(first(nd, 3, b"")),
-                        strings,
-                    ),
-                }
-            )
+    def node_row(nd: dict) -> dict:
+        return {
+            "node_id": zigzag_decode(first(nd, 1, 0)),
+            "lat": to_deg(lat_offset, zigzag_decode(first(nd, 8, 0))),
+            "lon": to_deg(lon_offset, zigzag_decode(first(nd, 9, 0))),
+            "tags": tags(nd),
+        }
 
-        dense_buf = first(group, 2)
-        if dense_buf is not None:  # DenseNodes
-            dn = parse_message(dense_buf)
-            ids = decode_packed(first(dn, 1, b""), signed=True, delta=True)
-            lats = decode_packed(first(dn, 8, b""), signed=True, delta=True)
-            lons = decode_packed(first(dn, 9, b""), signed=True, delta=True)
-            kvs = decode_packed(first(dn, 10, b""))
-            kv_pos = 0
-            for i, node_id in enumerate(ids):
-                tags: dict[str, str] = {}
-                while kv_pos < len(kvs) and kvs[kv_pos] != 0:
-                    tags[strings[kvs[kv_pos]]] = strings[kvs[kv_pos + 1]]
-                    kv_pos += 2
-                kv_pos += 1  # skip the 0 terminator
-                nodes.append(
-                    {
-                        "node_id": node_id,
-                        "lat": to_deg(lat_offset, lats[i]),
-                        "lon": to_deg(lon_offset, lons[i]),
-                        "tags": tags,
-                    }
-                )
+    def way_row(wy: dict) -> dict:
+        return {
+            "way_id": first(wy, 1, 0),
+            "node_refs": decode_packed(first(wy, 8, b""), signed=True, delta=True),
+            "tags": tags(wy),
+        }
 
-        for way_buf in group.get(3, []):
-            wy = parse_message(way_buf)
-            ways.append(
-                {
-                    "way_id": first(wy, 1, 0),
-                    "node_refs": decode_packed(
-                        first(wy, 8, b""), signed=True, delta=True
-                    ),
-                    "tags": _tags(
-                        decode_packed(first(wy, 2, b"")),
-                        decode_packed(first(wy, 3, b"")),
-                        strings,
-                    ),
-                }
-            )
-
-        for rel_buf in group.get(4, []):
-            rl = parse_message(rel_buf)
-            roles = decode_packed(first(rl, 8, b""))
-            memids = decode_packed(first(rl, 9, b""), signed=True, delta=True)
-            types = decode_packed(first(rl, 10, b""))
-            relations.append(
-                {
-                    "rel_id": first(rl, 1, 0),
-                    "members": [
-                        {
-                            "mtype": _MEMBER_TYPES[types[i]],
-                            "ref": memids[i],
-                            "role": strings[roles[i]],
-                        }
-                        for i in range(len(memids))
-                    ],
-                    "tags": _tags(
-                        decode_packed(first(rl, 2, b"")),
-                        decode_packed(first(rl, 3, b"")),
-                        strings,
-                    ),
-                }
-            )
-
-    return {"nodes": nodes, "ways": ways, "relations": relations}
-
-
-def decode_blob_columnar(blob_bytes: bytes) -> list[tuple[str, object]]:
-    """One OSMData Blob → ordered chunks for the COLUMNAR Spark path
-    (r14 volume probe): ``[("dense", cols), ("nodes", rows),
-    ("ways", rows), ("relations", rows), ...]`` in PrimitiveGroup
-    order. ``dense`` chunks carry numpy arrays (node_id/lat/lon) plus
-    a tags list — the dominant planet payload crosses into pandas/
-    Arrow without 50k-per-blob python dicts; the three minority kinds
-    stay row dicts identical to ``decode_blob``'s.
-
-    Numeric identity with the scalar path: coordinates compute
-    ``NANO * (offset + granularity * raw)`` with the integer part
-    exact in int64 (|raw·gran + off| < 2^53 for legal coordinates)
-    and one int→float round-to-nearest conversion — the same IEEE
-    ops CPython performs. Differential-pinned against decode_blob on
-    the golden, adversarial and dense fixtures
-    (tests/test_sources.py)."""
-    import numpy as np  # noqa: PLC0415
-
-    data = inflate_blob(blob_bytes)
-    block = parse_message(data)
-    strings = [
-        s.decode("utf-8") for s in parse_message(first(block, 1, b"")).get(1, [])
-    ]
-    granularity = first(block, 17, 100)
-    lat_offset = _signed64(first(block, 19, 0))
-    lon_offset = _signed64(first(block, 20, 0))
-
-    def to_deg_np(offset: int, raw) -> "np.ndarray":
-        return NANO * (offset + granularity * raw)
+    def relation_row(rl: dict) -> dict:
+        members = zip(
+            decode_packed(first(rl, 10, b"")),
+            decode_packed(first(rl, 9, b""), signed=True, delta=True),
+            decode_packed(first(rl, 8, b"")),
+            strict=True,
+        )
+        return {
+            "rel_id": first(rl, 1, 0),
+            "members": [
+                {"mtype": _MEMBER_TYPES[mtype], "ref": ref, "role": strings[role]}
+                for mtype, ref, role in members
+            ],
+            "tags": tags(rl),
+        }
 
     chunks: list[tuple[str, object]] = []
     for group_buf in block.get(2, []):
@@ -481,133 +459,53 @@ def decode_blob_columnar(blob_bytes: bytes) -> list[tuple[str, object]]:
         dense_buf = first(group, 2)
         if dense_buf is not None:
             dn = parse_message(dense_buf)
-            ids = _decode_packed_np(first(dn, 1, b""), True, True)
-            lats = _decode_packed_np(first(dn, 8, b""), True, True)
-            lons = _decode_packed_np(first(dn, 9, b""), True, True)
-            if ids is None or lats is None or lons is None:
-                # outside the vectorized bounds: exact scalar decode
-                ids = np.array(
-                    decode_packed(first(dn, 1, b""), signed=True, delta=True),
-                    dtype=np.int64,
-                )
-                lats = np.array(
-                    decode_packed(first(dn, 8, b""), signed=True, delta=True),
-                    dtype=np.int64,
-                )
-                lons = np.array(
-                    decode_packed(first(dn, 9, b""), signed=True, delta=True),
-                    dtype=np.int64,
-                )
+            ids, lats, lons = (delta_column(first(dn, no, b"")) for no in (1, 8, 9))
             n = len(ids)
+            if len(lats) != n or len(lons) != n:
+                raise ValueError(
+                    f"DenseNodes carries {n} ids, {len(lats)} lats, {len(lons)} lons"
+                )
             kv_buf = first(dn, 10, b"")
             if kv_buf:
                 kvs = decode_packed(kv_buf)
-                tags: list[dict] = []
+                dense_tags: list[dict] = []
                 kv_pos = 0
                 m = len(kvs)
                 for _i in range(n):
                     if kv_pos >= m:
-                        tags.append({})
+                        dense_tags.append({})
                         continue
                     t: dict[str, str] = {}
                     while kv_pos < m and kvs[kv_pos] != 0:
                         t[strings[kvs[kv_pos]]] = strings[kvs[kv_pos + 1]]
                         kv_pos += 2
                     kv_pos += 1
-                    tags.append(t)
+                    dense_tags.append(t)
             else:
                 empty: dict[str, str] = {}
-                tags = [empty] * n  # read-only placeholders
+                dense_tags = [empty] * n  # read-only placeholders
             chunks.append(
                 (
                     "dense",
                     {
                         "node_id": ids,
-                        "lat": to_deg_np(lat_offset, lats),
-                        "lon": to_deg_np(lon_offset, lons),
-                        "tags": tags,
+                        "lat": to_deg(lat_offset, lats),
+                        "lon": to_deg(lon_offset, lons),
+                        "tags": dense_tags,
                     },
                 )
             )
 
-        plain = group.get(1, [])
-        if plain:
-            rows = []
-            for node_buf in plain:
-                nd = parse_message(node_buf)
-                rows.append(
-                    {
-                        "node_id": zigzag_decode(first(nd, 1, 0)),
-                        "lat": to_deg(
-                            lat_offset, granularity, zigzag_decode(first(nd, 8, 0))
-                        ),
-                        "lon": to_deg(
-                            lon_offset, granularity, zigzag_decode(first(nd, 9, 0))
-                        ),
-                        "tags": _tags(
-                            decode_packed(first(nd, 2, b"")),
-                            decode_packed(first(nd, 3, b"")),
-                            strings,
-                        ),
-                    }
-                )
-            chunks.append(("nodes", rows))
-
-        wy_bufs = group.get(3, [])
-        if wy_bufs:
-            rows = []
-            for way_buf in wy_bufs:
-                wy = parse_message(way_buf)
-                rows.append(
-                    {
-                        "way_id": first(wy, 1, 0),
-                        "node_refs": decode_packed(
-                            first(wy, 8, b""), signed=True, delta=True
-                        ),
-                        "tags": _tags(
-                            decode_packed(first(wy, 2, b"")),
-                            decode_packed(first(wy, 3, b"")),
-                            strings,
-                        ),
-                    }
-                )
-            chunks.append(("ways", rows))
-
-        rel_bufs = group.get(4, [])
-        if rel_bufs:
-            rows = []
-            for rel_buf in rel_bufs:
-                rl = parse_message(rel_buf)
-                roles = decode_packed(first(rl, 8, b""))
-                memids = decode_packed(first(rl, 9, b""), signed=True, delta=True)
-                types = decode_packed(first(rl, 10, b""))
-                rows.append(
-                    {
-                        "rel_id": first(rl, 1, 0),
-                        "members": [
-                            {
-                                "mtype": _MEMBER_TYPES[types[i]],
-                                "ref": memids[i],
-                                "role": strings[roles[i]],
-                            }
-                            for i in range(len(memids))
-                        ],
-                        "tags": _tags(
-                            decode_packed(first(rl, 2, b"")),
-                            decode_packed(first(rl, 3, b"")),
-                            strings,
-                        ),
-                    }
-                )
-            chunks.append(("relations", rows))
+        for kind, field_no, row in (
+            ("nodes", 1, node_row),
+            ("ways", 3, way_row),
+            ("relations", 4, relation_row),
+        ):
+            bufs = group.get(field_no)
+            if bufs:
+                chunks.append((kind, [row(parse_message(b)) for b in bufs]))
 
     return chunks
-
-
-def to_deg(offset: int, granularity: int, raw: int) -> float:
-    """Module-level twin of _decode_blob's inner to_deg (shared by
-    the columnar path's plain-node leg)."""
-    return NANO * (offset + granularity * raw)
 
 
 def scan_blob_offsets(pbf_path: str) -> list[tuple[int, int, str]]:

@@ -4,7 +4,7 @@ tables can't catch."""
 
 from decimal import ROUND_HALF_UP, Decimal
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 amounts = st.lists(
@@ -580,3 +580,62 @@ def test_gram_micro_partials_match_decimal_half_up(batches):
         (1, 0): (sum(_micros_ref(x) for x in xs), len(xs)),
         (1, 1): (sum(_micros_ref(x * x) for x in xs), len(xs)),
     }
+
+
+# Raw (pre-zigzag) varint values for packed OSM PBF fields; each list
+# shape aims at one side of decode_packed's numpy/scalar split.
+_packed_raw = st.one_of(
+    # short varints: long runs cross the 64-byte cut-over, numpy answers
+    st.lists(st.integers(0, 2**14), max_size=120),
+    # up to 9-byte varints: unsigned delta sums run past 2^62 and 2^63
+    st.lists(st.integers(0, 2**63 - 1), max_size=40),
+    # 10-byte varints (full uint64) mixed in: numpy declines
+    st.lists(
+        st.one_of(st.integers(0, 127), st.integers(2**56, 2**64 - 1)), max_size=60
+    ),
+    # the int64 edges, where a running delta sum can leave int64
+    st.lists(st.sampled_from([0, 1, 2**62 - 1, 2**62, 2**63 - 2, 2**63 - 1]), max_size=80),
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    raw=_packed_raw,
+    tail=st.sampled_from([b"", b"\x80", b"\xff\xff\xff"]),
+    signed=st.booleans(),
+    delta=st.booleans(),
+)
+@example(raw=[2**63 - 2] * 3 + [0] * 60, tail=b"", signed=True, delta=True)
+@example(raw=[2**62 + 1] * 70, tail=b"", signed=False, delta=True)
+def test_packed_decode_numpy_matches_scalar(raw, tail, signed, delta):
+    """decode_packed's vectorized path equals the scalar loop wherever
+    it answers, and both follow one int64 rule: a delta sum that
+    leaves int64 raises ValueError on either path (numpy used to wrap
+    it silently, Python ints to carry it on), a truncated tail raises
+    IndexError. Covers signed/unsigned x delta/plain, lengths on both
+    sides of the 64-byte cut-over, 9- and 10-byte varints and unsigned
+    sums past 2^62."""
+    from osm_airflow_spark.sources.pbf_wire import (
+        _decode_packed_np,
+        _decode_packed_scalar,
+        decode_packed,
+        encode_varint,
+    )
+
+    buf = b"".join(encode_varint(v) for v in raw) + tail
+
+    def outcome(fn):
+        try:
+            return fn(buf, signed, delta)
+        except (IndexError, ValueError) as e:
+            return type(e)
+
+    want = outcome(_decode_packed_scalar)
+    assert outcome(decode_packed) == want
+    fast = _decode_packed_np(buf, signed, delta)
+    if fast is not None:
+        assert fast.tolist() == want
+    if tail:
+        assert want is IndexError
+    elif delta and want is not ValueError:
+        assert all(-(2**63) <= v < 2**63 for v in want)

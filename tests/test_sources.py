@@ -203,16 +203,17 @@ def test_pbf_single_pass_union_decode(spark, pbf_file):
 
 
 def test_pbf_decode_rejects_malformed_input(pbf_file):
-    """Untrusted-input bounds: truncated blobs, lying raw_size, and
-    decompression bombs all surface as descriptive ValueError — never
-    a raw IndexError or an uncapped zlib.decompress."""
+    """Untrusted-input bounds on the block decoder ingest runs:
+    truncated blobs, lying raw_size, and decompression bombs all
+    surface as descriptive ValueError — never a raw IndexError or an
+    uncapped zlib.decompress."""
     import zlib
 
     import pytest as _pytest
 
     from osm_airflow_spark.sources.pbf_wire import (
         MAX_BLOB_RAW,
-        decode_blob,
+        decode_blob_columnar,
         encode_field,
         scan_blob_offsets,
     )
@@ -224,27 +225,27 @@ def test_pbf_decode_rejects_malformed_input(pbf_file):
         good = fh.read(length)
 
     with _pytest.raises(ValueError):
-        decode_blob(good[: length // 2])  # truncated mid-message
+        decode_blob_columnar(good[: length // 2])  # truncated mid-message
 
     # raw_size that contradicts the actual inflated size
     payload = zlib.compress(b"x" * 100)
     lying = encode_field(2, 0, 50) + encode_field(3, 2, payload)
     with _pytest.raises(ValueError, match="raw_size|cap"):
-        decode_blob(lying)
+        decode_blob_columnar(lying)
 
     # decompression bomb: declares a legal raw_size but inflates past it
     bomb = encode_field(2, 0, 1024) + encode_field(
         3, 2, zlib.compress(b"\0" * (4 * 1024 * 1024))
     )
     with _pytest.raises(ValueError, match="cap|raw_size"):
-        decode_blob(bomb)
+        decode_blob_columnar(bomb)
 
     # declared raw_size beyond the spec's 32MB hard cap
     too_big = encode_field(2, 0, MAX_BLOB_RAW + 1) + encode_field(
         3, 2, zlib.compress(b"")
     )
     with _pytest.raises(ValueError, match="spec cap"):
-        decode_blob(too_big)
+        decode_blob_columnar(too_big)
 
     # truncated zlib stream in a raw_size-LESS blob: decompressobj
     # returns partial data without raising, so only the eof check
@@ -252,7 +253,7 @@ def test_pbf_decode_rejects_malformed_input(pbf_file):
     truncated_stream = zlib.compress(b"y" * 1000)[:-10]
     no_raw_size = encode_field(3, 2, truncated_stream)
     with _pytest.raises(ValueError, match="truncated zlib"):
-        decode_blob(no_raw_size)
+        decode_blob_columnar(no_raw_size)
 
 
 def test_pbf_scan_rejects_truncated_file(tmp_path, pbf_file):
@@ -413,14 +414,13 @@ def test_zorder_write_tightens_both_dimensions(spark, sf_dir, tmp_path):
 def test_pbf_python_datasource_matches_function_reader(spark, pbf_file):
     """The osm_pbf Data Source (Spark 4 Python DataSource API) must
     return exactly the rows the function-style reader returns: same
-    union schema, same elements, one partition per OSMData blob."""
+    union schema, same elements, one partition per OSMData blob. Run
+    over the small self-encoded file and over golden_1000 (raw + zlib
+    blobs, plain + dense nodes, relations)."""
     from osm_airflow_spark.sources.pbf import read_pbf_elements
     from osm_airflow_spark.sources.pbf_datasource import register_pbf_source
 
     register_pbf_source(spark)
-    via_source = spark.read.format("osm_pbf").load(pbf_file)
-    via_fn = read_pbf_elements(spark, pbf_file)
-    assert via_source.schema == via_fn.schema
 
     def canon(df):
         return sorted(
@@ -431,42 +431,56 @@ def test_pbf_python_datasource_matches_function_reader(spark, pbf_file):
             for r in df.collect()
         )
 
-    assert canon(via_source) == canon(via_fn)
-    counts = {
-        r["kind"]: r["n"]
-        for r in via_source.groupBy("kind").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert counts == {"node": 4, "way": 2, "relation": 1}
+    for path, expected in (
+        (pbf_file, {"node": 4, "way": 2, "relation": 1}),
+        (GOLDEN_PBF, {"node": 900, "way": 80, "relation": 20}),
+    ):
+        via_source = spark.read.format("osm_pbf").load(path)
+        via_fn = read_pbf_elements(spark, path)
+        assert via_source.schema == via_fn.schema
+        assert canon(via_source) == canon(via_fn)
+        counts = {
+            r["kind"]: r["n"]
+            for r in via_source.groupBy("kind")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        assert counts == expected
 
 
-@pytest.mark.parametrize("which", ["roundtrip", "dense10k"])
+@pytest.mark.parametrize("which", ["roundtrip", "golden1000", "dense10k"])
 def test_pbf_decoder_survives_fuzzed_corruption(pbf_file, which):
-    """Adversarial-robustness floor for the wire decoder (the
-    component a real geofabrik extract would hit first): random
-    single-byte corruptions and truncations of a valid file must
-    produce either a successful decode (mutation hit a don't-care
-    byte) or a clean Python exception — never a hang, a negative
-    allocation, or an interpreter-level crash. Deterministic seed so
-    failures reproduce. Parametrized over the self-encoded roundtrip
-    file AND the 10k-node independent dense fixture (r8) — the dense
-    block's 2-byte string indices and long delta chains corrupt into
-    shapes the small file cannot produce."""
-    if which == "dense10k":
-        pbf_file = os.path.join(
-            os.path.dirname(__file__), "fixtures", "golden_dense_10k.osm.pbf"
-        )
+    """Adversarial-robustness floor for the block decoder ingest runs
+    (the component a real geofabrik extract would hit first): random
+    single-byte corruptions and truncations must produce either a
+    successful decode (mutation hit a don't-care byte) or a
+    ValueError — zlib.error / struct.error only from the envelope —
+    never a raw IndexError / TypeError, a hang, a negative allocation,
+    or an interpreter-level crash. Deterministic seed so failures
+    reproduce. Two legs: mutations of the framed FILE (mostly caught
+    by zlib or the framing) and mutations of each data blob's INFLATED
+    PrimitiveBlock re-wrapped as a raw blob, which reach the block
+    walk itself. Parametrized over the self-encoded roundtrip file,
+    the independent golden_1000 (raw + zlib blobs, plain + dense
+    nodes, relations) and the 10k-node dense fixture, whose 2-byte
+    string indices and long delta chains corrupt into shapes the
+    small files cannot produce."""
+    if which != "roundtrip":
+        pbf_file = GOLDEN_PBF if which == "golden1000" else GOLDEN_DENSE_PBF
     import random
     import struct
     import zlib
 
     from osm_airflow_spark.sources.pbf_wire import (
-        decode_blob,
+        decode_blob_columnar,
+        encode_field,
+        inflate_blob,
         scan_blob_offsets,
     )
 
     raw = open(pbf_file, "rb").read()
     rng = random.Random(1234)
-    acceptable = (ValueError, KeyError, IndexError, EOFError, struct.error, zlib.error)
+    acceptable = (ValueError, struct.error, zlib.error)
 
     def drive(buf: bytes) -> None:
         import os
@@ -478,7 +492,7 @@ def test_pbf_decoder_survives_fuzzed_corruption(pbf_file, which):
                 fh.write(buf)
             for start, length, blob_type in scan_blob_offsets(path):
                 if blob_type == "OSMData":
-                    decode_blob(buf[start : start + length])
+                    decode_blob_columnar(buf[start : start + length])
         finally:
             os.unlink(path)
 
@@ -500,6 +514,23 @@ def test_pbf_decoder_survives_fuzzed_corruption(pbf_file, which):
     # some mutations must be harmless (string-table bytes etc.) —
     # if EVERY mutation raised, the guard set is suspiciously strict
     assert survived > 0
+
+    rejected = 0
+    for start, length, blob_type in scan_blob_offsets(pbf_file):
+        if blob_type != "OSMData":
+            continue
+        block = inflate_blob(raw[start : start + length])
+        cases = [block[:cut] for cut in range(1, len(block), max(1, len(block) // 40))]
+        for _ in range(100):
+            mutated = bytearray(block)
+            mutated[rng.randrange(len(block))] = rng.randrange(256)
+            cases.append(bytes(mutated))
+        for case in cases:
+            try:
+                decode_blob_columnar(encode_field(1, 2, case))
+            except ValueError:
+                rejected += 1
+    assert rejected > 0
 
 
 def test_compact_snapshot_merges_small_files_preserving_content(spark, sf_dir, tmp_path):
@@ -1284,57 +1315,3 @@ def test_pbf_fanout_deals_blobs_round_robin(spark, tmp_path):
     # than a whole round
     for n, p in ((1, 1), (5, 8), (20, 8), (21, 4), (80_003, 32)):
         assert sorted(_stride_order(n, p)) == list(range(n))
-
-
-def test_columnar_decode_identical_to_dict_decode(tmp_path):
-    """decode_blob_columnar (the Arrow-bound hot path) must agree
-    with decode_blob bit-for-bit — including float coordinates (the
-    int64 → float64 conversion is the same IEEE op in numpy and
-    CPython) and tag dicts — across the maximal-adversarial file
-    (DenseInfo, unknown fields, coordinate corners, 2^40 deltas, the
-    >16 MB blob, zlib-without-raw_size) and a dense-volume file."""
-    import sys
-
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import tools.make_adversarial_pbf as adv
-    from tools.make_dense_pbf import build
-
-    from osm_airflow_spark.sources import pbf_wire
-
-    adv_path = str(tmp_path / "adv.osm.pbf")
-    adv.build(adv_path)
-    dense_path = str(tmp_path / "dense.osm.pbf")
-    build(dense_path, target_mb=4)
-
-    def flatten(chunks):
-        out = {"nodes": [], "ways": [], "relations": []}
-        for kind, payload in chunks:
-            if kind == "dense":
-                ids = payload["node_id"].tolist()
-                lats = payload["lat"].tolist()
-                lons = payload["lon"].tolist()
-                out["nodes"].extend(
-                    {
-                        "node_id": ids[i],
-                        "lat": lats[i],
-                        "lon": lons[i],
-                        "tags": payload["tags"][i],
-                    }
-                    for i in range(len(ids))
-                )
-            elif kind == "nodes":
-                out["nodes"].extend(payload)
-            elif kind == "ways":
-                out["ways"].extend(payload)
-            else:
-                out["relations"].extend(payload)
-        return out
-
-    for path in (adv_path, dense_path):
-        with open(path, "rb") as fh:
-            for s, l in pbf_wire.validated_data_offsets(path):
-                fh.seek(s)
-                blob = fh.read(l)
-                assert pbf_wire.decode_blob(blob) == flatten(
-                    pbf_wire.decode_blob_columnar(blob)
-                ), (path, s)

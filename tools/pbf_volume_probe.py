@@ -51,13 +51,17 @@ def dense_file(target_mb: int) -> tuple[str, dict]:
 def probe(spark, target_mb: int) -> dict:
     from pyspark.sql import functions as F
 
-    from osm_airflow_spark.sources.pbf import _offsets_df, read_pbf_elements
+    from osm_airflow_spark.sources.pbf import (
+        _decode_union,
+        _offsets_df,
+        read_pbf_elements,
+    )
 
     path, facts = dense_file(target_mb)
     mb = facts["bytes"] / (1024 * 1024)
 
     # full decode fan-out: per-kind counts force every blob through
-    # decode_blob exactly once (single pass, union output)
+    # the block decoder exactly once (single pass, union output)
     t0 = time.time()
     counts = dict(
         read_pbf_elements(spark, path).groupBy("kind").count().collect()
@@ -65,27 +69,22 @@ def probe(spark, target_mb: int) -> dict:
     decode_s = time.time() - t0
     elements = sum(counts.values())
 
-    # per-worker peak RSS: decode each blob again inside a probe UDF
-    # over the same fan-out (blob ids indexing the stride-ordered
-    # offsets) that reports ru_maxrss (KB on Linux) — proves per-task
-    # memory is one-inflated-blob bounded, not file-proportional
+    # per-worker peak RSS: run the ingest's own decode body
+    # (_decode_union: decoder plus union frames, per blob) again over
+    # the same fan-out, and report ru_maxrss (KB on Linux) — proves
+    # per-task memory is one-inflated-blob bounded, not
+    # file-proportional
     ids, offsets = _offsets_df(spark, path)
+    decode = _decode_union(path, offsets)
 
     def _rss(iterator):
         import resource
 
         import pandas as pd
 
-        from osm_airflow_spark.sources import pbf_wire
-
-        peak = 0
-        for pdf in iterator:
-            with open(path, "rb") as fh:
-                for blob_id in pdf["id"]:
-                    start, length = offsets[blob_id]
-                    fh.seek(start)
-                    pbf_wire.decode_blob(fh.read(length))
-                    peak = max(peak, resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
+        for _frame in decode(iterator):
+            pass
+        peak = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
         yield pd.DataFrame({"peak_kb": [peak]})
 
     peak_kb = (
